@@ -1,11 +1,46 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver-provided parquet tables (TESTDATA.md). */
+/** Loaders for the driver-provided parquet tables (TESTDATA.md).
+  *
+  * Every table's schema is declared here (FIXTURES.md §B), so a load plans
+  * without Spark's parquet schema inference — a footer-merging job of
+  * 70–100 ms per read at sf0.1 that every query used to pay before any of
+  * its own work. The declarations are what inference yields for these
+  * files (TablesSchemaSpec pins them against the footers at every scale):
+  * timestamps are `TIMESTAMP_NTZ`, every field is nullable. A new fixture
+  * table needs its schema added here and in that spec.
+  */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  val schemas: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" ->
+      "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING",
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  /** `$dir/$name.parquet` read with its declared schema; an undeclared
+    * name fails here, on the driver, before any plan exists.
+    */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val schema = schemas.getOrElse(name, throw new IllegalArgumentException(
+      s"undeclared table '$name' (declared: ${schemas.keys.toSeq.sorted.mkString(", ")})"))
+    spark.read.schema(schema).parquet(s"$dir/$name.parquet")
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.sql.Checkpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,11 +32,13 @@ import org.apache.spark.sql.functions._
   * BFS does O(|E reachable|) total join work across ALL rounds combined
   * (each edge is expanded from its endpoint's discovery round only), vs
   * the oracle's fixed-R full relaxation doing O(R x |E|) — the engine
-  * shape is the one that holds at 100 TB. The visited set is a lazy
-  * union of the per-round checkpointed frontiers (each piece is
-  * materialized once, the union is lineage-flat — never re-copied). The
-  * loop-invariant symmetrized edge frame is pinned once (the
-  * [[PageRank]] discipline).
+  * shape is the one that holds at 100 TB. Each frontier is checkpointed
+  * with its size riding the checkpoint job ([[graft.sql.Checkpoint]]):
+  * 5 jobs per round (CheckpointJobsSpec). The visited set is a lazy union
+  * of those frontiers (each materialized once, never re-copied), so round
+  * r's anti-join scans r pieces — O(rounds^2) scan legs in total, which
+  * matters only past `maxRounds` 16. The loop-invariant symmetrized edge
+  * frame is pinned once (the [[PageRank]] discipline).
   */
 class BfsDistance(
     maxRounds: Int = 16,
@@ -59,31 +62,26 @@ class BfsDistance(
     val sym = und.select(col("a").as("s"), col("b").as("d"))
       .union(und.select(col("b").as("s"), col("a").as("d")))
       .localCheckpoint()
-    val s0 = seeds
+    val (s0, seeded) = Checkpoint.counted(seeds
       .select(col(seeds.columns.head).cast("long").as("id"))
       .where(col("id").isNotNull)
       .distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
-    // the visited set is a UNION of per-round checkpointed frontiers,
-    // never re-materialized (r17, guide §1.2 job-count audit): the old
-    // loop ran visited.union(next).localCheckpoint() every round — a
-    // second blocking action per round that re-copied the ENTIRE visited
-    // set (O(rounds × |V|) churn). Each piece is already checkpointed, so
-    // the union is lineage-flat; the per-round anti-join reads the
-    // ≤ maxRounds-way union of memory-backed scans directly.
+      .withColumn("dist", lit(0L)))
+    // the visited set is a UNION of the checkpointed frontiers, never
+    // re-materialized: re-pinning it per round would cost a second action
+    // and re-copy all of it (O(rounds × |V|)); the anti-join reads the
+    // ≤ maxRounds-way union of memory-backed scans directly
     var frontiers = Vector(s0)
     var frontier = s0
     var round = 0
-    var done = frontier.isEmpty
+    var done = seeded == 0L
     while (!done) {
       val visitedIds = frontiers.map(_.select("id")).reduce(_ union _)
-      val next = sym.join(frontier, sym("s") === frontier("id"))
+      val (next, found) = Checkpoint.counted(sym.join(frontier, sym("s") === frontier("id"))
         .select(sym("d").as("id")).distinct()
         .join(visitedIds, Seq("id"), "left_anti")
-        .withColumn("dist", lit(round + 1L))
-        .localCheckpoint()
-      done = next.isEmpty
+        .withColumn("dist", lit(round + 1L)))
+      done = found == 0L
       if (!done) {
         round += 1
         require(round <= maxRounds,

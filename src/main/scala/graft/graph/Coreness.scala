@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.sql.Checkpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,9 +40,11 @@ import org.apache.spark.sql.functions._
   * contributes 10M rows to a map-side-combined count but at most
   * min(degree, max value) distinct rows to the window sort, so hub skew
   * is bounded by the value range, not the degree. The value frame is
-  * self-consuming, so it localCheckpoints per round; the loop-invariant
-  * symmetrized edge frame is pinned ONCE (the PageRank discipline —
-  * re-pinning loop invariants measured 2.5x slower there).
+  * self-consuming, so it is checkpointed per round, its sum riding the
+  * checkpoint job ([[graft.sql.Checkpoint]]): 4 jobs per round
+  * (CheckpointJobsSpec). The loop-invariant symmetrized edge frame is
+  * pinned ONCE (the PageRank discipline — re-pinning loop invariants
+  * measured 2.5x slower there).
   */
 class Coreness(
     maxRounds: Int = 24,
@@ -63,12 +66,13 @@ class Coreness(
     val sym = und.select(col("a").as("s"), col("b").as("d"))
       .union(und.select(col("b").as("s"), col("a").as("d")))
       .localCheckpoint()
-    var cur = sym.groupBy(col("s")).agg(count(lit(1)).as("c"))
-      .select(col("s").as("node"), col("c"))
-      .localCheckpoint()
-    def total(df: DataFrame): Long =
-      df.agg(coalesce(sum("c"), lit(0L)).as("t")).head().getLong(0)
-    var sumC = total(cur)
+    // (pinned values, their sum): the sum rides the checkpoint job
+    def pinned(df: DataFrame): (DataFrame, Long) = {
+      val (ck, m) = Checkpoint.observed(df, coalesce(sum(col("c")), lit(0L)))
+      (ck, m.getLong(0))
+    }
+    var (cur, sumC) = pinned(sym.groupBy(col("s")).agg(count(lit(1)).as("c"))
+      .select(col("s").as("node"), col("c")))
     var refineRounds = 0
     var converged = sumC == 0L
     while (!converged) {
@@ -79,13 +83,11 @@ class Coreness(
       // (no per-node sort of raw neighbor lists — see the class doc)
       val hist = nb.groupBy(col("n"), col("v")).agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy(col("n")).orderBy(col("v").desc)
-      val next = hist
+      val (next, nextSum) = pinned(hist
         .withColumn("cnt_ge", sum(col("cnt")).over(w))
         .groupBy(col("n"))
         .agg(max(least(col("v"), col("cnt_ge"))).as("c"))
-        .select(col("n").as("node"), col("c"))
-        .localCheckpoint()
-      val nextSum = total(next)
+        .select(col("n").as("node"), col("c")))
       converged = nextSum == sumC
       if (!converged) {
         refineRounds += 1

@@ -1,7 +1,9 @@
 package graft.graph
 
+import graft.sql.Checkpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -30,12 +32,12 @@ import scala.collection.mutable.ArrayBuffer
   *
   * == Scale shape ==
   *
-  * Per round: one map-side-combinable degree count, two scalar counts
-  * (the same aggregates that drive the loop), two semi-joins restricting
-  * the edge list — all keyed on node ids, the [[KCore]] budget. The
-  * shrinking edge frame re-materializes per round via `localCheckpoint`
-  * (it is self-consuming); snapshots keep only the per-round NODE frames,
-  * each a (node) column already materialized by the round's checkpoint.
+  * Per round: one map-side-combinable degree count and two semi-joins
+  * against the broadcast survivors — all keyed on node ids, the [[KCore]]
+  * budget. The degree and edge frames re-materialize per round via
+  * [[graft.sql.Checkpoint]], whose jobs also return |V| and |E|: 4 jobs per
+  * round (CheckpointJobsSpec). Snapshots keep only the per-round NODE
+  * frames, each a (node) column already materialized by its checkpoint.
   */
 class DensestSubgraph(
     maxRounds: Int = 32,
@@ -50,35 +52,35 @@ class DensestSubgraph(
     * collapsed (the [[KCore]] contract).
     */
   def run(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    var und = edges
+    // |E| and |V| ride the checkpoint jobs that pin each frame
+    var (und, e) = Checkpoint.counted(edges
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
       .where(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val snaps = ArrayBuffer.empty[(Long, Long, DataFrame)] // (E, V, nodes)
-    var e = und.count()
     var round = 0
     while (e > 0L) {
       round += 1
       require(round <= maxRounds,
         s"densest-subgraph peeling did not empty the graph within maxRounds=$maxRounds " +
           "(raise it; the graph is deeper than this wiring expected)")
-      val deg = und.select(col("a").as("s")).union(und.select(col("b").as("s")))
-        .groupBy(col("s")).agg(count(lit(1)).as("dg"))
-        .localCheckpoint()
-      val v = deg.count()
+      val (deg, v) = Checkpoint.counted(und.select(col("a").as("s"))
+        .union(und.select(col("b").as("s")))
+        .groupBy(col("s")).agg(count(lit(1)).as("dg")))
       snaps += ((e, v, deg.select(col("s"))))
       // peel: KEEP deg * V > 4 * E (exact integer arithmetic; removal is
-      // the <= complement, which always catches the minimum-degree node)
-      val keep = deg.where(col("dg") * lit(v) > lit(4L * e)).select(col("s"))
-      und = und
+      // the <= complement, which always catches the minimum-degree node).
+      // At most V survivors: broadcast by that exact count, as the planner
+      // has only pre-checkpoint estimates (sort-merge joins AQE demotes late)
+      val kept = deg.where(col("dg") * lit(v) > lit(4L * e)).select(col("s"))
+      val keep = if (v * 8L <= SQLConf.get.autoBroadcastJoinThreshold) broadcast(kept) else kept
+      val (next, nextE) = Checkpoint.counted(und
         .join(keep.select(col("s").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("s").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint()
-      e = und.count()
+        .select(col("a"), col("b")))
+      und = next
+      e = nextE
     }
     if (snaps.isEmpty) {
       und.select(col("a").as("id"), lit(0.0).as("density")).where(lit(false))

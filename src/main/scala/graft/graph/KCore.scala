@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.sql.Checkpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,9 +35,10 @@ import org.apache.spark.sql.functions._
   * localCheckpoints per round (the StarContraction/DedupClusters
   * discipline for self-consuming iteration — unlike PageRank, whose
   * loop-invariant inputs make per-round pinning a measured 2.5×
-  * pessimization); lineage stays O(1) and the early-stop count() rides
-  * the checkpoint's own materialization. Rounds = the graph's peeling
-  * depth, capped explicitly by `maxRounds`.
+  * pessimization); lineage stays O(1) and the early-stop edge count
+  * rides the checkpoint job ([[graft.sql.Checkpoint]]): 5 jobs per round
+  * (CheckpointJobsSpec). Rounds = the graph's peeling depth, capped
+  * explicitly by `maxRounds`.
   */
 class KCore(
     k: Int,
@@ -59,10 +61,8 @@ class KCore(
       .where(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
       .distinct()
-    var cur = und.select(col("a").as("s"), col("b").as("d"))
-      .union(und.select(col("b").as("s"), col("a").as("d")))
-      .localCheckpoint()
-    var prevEdges = cur.count()
+    var (cur, prevEdges) = Checkpoint.counted(und.select(col("a").as("s"), col("b").as("d"))
+      .union(und.select(col("b").as("s"), col("a").as("d"))))
     // only rounds that REMOVE edges count toward the cap: convergence is
     // detected by one extra confirming round (equal edge count), and
     // charging that round against maxRounds made the engine need
@@ -77,15 +77,13 @@ class KCore(
       val keep = cur.groupBy(col("s")).agg(count(lit(1)).as("__deg"))
         .where(col("__deg") >= k).select(col("s").as("__keep"))
         .localCheckpoint()
-      val next = cur
-        .join(keep, cur("s") === keep("__keep"), "left_semi")
-        .join(keep.select(col("__keep").as("__keep2")),
-          cur("d") === col("__keep2"), "left_semi")
-        .localCheckpoint()
       // every node in an edge list has degree >= 1, so pruning any node
       // removes at least one (symmetrized) edge: edge-count equality IS
       // the fixpoint test, no node-set diff needed
-      val nextEdges = next.count()
+      val (next, nextEdges) = Checkpoint.counted(cur
+        .join(keep, cur("s") === keep("__keep"), "left_semi")
+        .join(keep.select(col("__keep").as("__keep2")),
+          cur("d") === col("__keep2"), "left_semi"))
       converged = nextEdges == prevEdges
       if (!converged) {
         peelRounds += 1

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.sql.Checkpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -54,11 +55,10 @@ class LabelPropagation(
       .where(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
       .distinct()
-    val sym = und.select(col("a").as("s"), col("b").as("d"))
-      .union(und.select(col("b").as("s"), col("a").as("d")))
-      .localCheckpoint()
-    val negIds = sym.where(col("s") < 0L).limit(1).count()
-    require(negIds == 0L, "label propagation needs non-negative node ids " +
+    // the id probe rides the checkpoint job (null min: no edges)
+    val (sym, ids) = Checkpoint.observed(und.select(col("a").as("s"), col("b").as("d"))
+      .union(und.select(col("b").as("s"), col("a").as("d"))), min(col("s")))
+    require(ids.isNullAt(0) || ids.getLong(0) >= 0L, "label propagation needs non-negative node ids " +
       "(the tie-break rides negated labels)")
     var labels = sym.select(col("s").as("node")).distinct()
       .withColumn("lbl", col("node"))

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.sql.Checkpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -55,19 +56,19 @@ object StarContraction {
     // min-partner derivation relies on every edge pointing DOWN (so no
     // node can ever label itself upward, and the component min always
     // labels itself — the property the convergence certificate rests on)
-    val original = pairs
+    val (original, pairRows) = Checkpoint.counted(pairs
       .select(
         greatest(col("id_a"), col("id_b")).as("a"),
         least(col("id_a"), col("id_b")).as("b"))
       .where(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val nodesCk = nodes.select(col(idCol).as("id")).localCheckpoint(true)
+      .distinct())
+    val (nodesCk, nodeRows) = Checkpoint.counted(nodes.select(col(idCol).as("id")))
 
     // frame sizing: the round frames inherit upstream shuffle partitioning;
     // coalesce to ~1M rows/partition (capped at default parallelism) so
-    // small graphs don't pay 32 tasks of scheduling per round
-    val rows = original.count() max nodesCk.count()
+    // small graphs don't pay 32 tasks of scheduling per round; both sizes
+    // ride the checkpoint jobs
+    val rows = pairRows max nodeRows
     val parts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, rows / (1L << 20) + 1)).toInt
 

@@ -164,13 +164,15 @@ class KMeans(
     // the estimator contract shared with the other fits (LR, binning,
     // downsampling): a model fit on zero rows must fail loudly, never
     // silently return a degenerate (here: centroid-less) model. The
-    // seeds are already materialized, so this check costs no extra pass.
-    require(!cents.isEmpty, "cannot fit k-means on an empty vector column")
-    for (_ <- 0 until iters) {
+    // emptiness comes from round 1's literal collect, not a job of its own.
+    var cells = cellLiterals(cents)
+    require(!cells._1, "cannot fit k-means on an empty vector column")
+    for (r <- 0 until iters) {
       // row-local assignment (r17): the old e.join(assignCv(e, cents)
       // .select(id, cid), idCol) paid the argmax shuffle + a join-back per
       // round; the null-id filter replicates the equi-join's null drop
-      val (_, cidLit, centLit) = cellLiterals(cents) // non-empty (require above)
+      if (r > 0) cells = cellLiterals(cents)
+      val (_, cidLit, centLit) = cells
       val means = e.where(col(idCol).isNotNull)
         .withColumn("b", org.apache.spark.sql.GraftBridge.column(
           graft.sql.expressions.NearestCellL2(

@@ -1,0 +1,115 @@
+package graft.sql
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.SparkTestBase
+import graft.graph.{BfsDistance, Coreness, DensestSubgraph, KCore}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Job-count pins: [[Checkpoint]] costs the jobs of a bare
+  * `localCheckpoint` and returns exact aggregates, and the convergence
+  * loops that use it stay within their documented jobs per round. The
+  * per-round cost is the job difference between two inputs whose loop
+  * depths differ by a known number of rounds, so set-up and the final
+  * plan cancel out.
+  */
+class CheckpointJobsSpec extends SparkTestBase {
+  import spark.implicits._
+
+  /** Jobs started on this thread while `body` runs (tagged, bus drained). */
+  private def jobs(body: => Any): Int = {
+    val tag = s"ckjobs-${System.nanoTime}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      body
+      drain()
+      n.get
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  // SparkContext.listenerBus is private[spark]; the bench drains it the
+  // same way
+  private def drain(): Unit = {
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+      .invoke(bus, java.lang.Long.valueOf(10000L))
+  }
+
+  private def edges(es: Seq[(Long, Long)]): DataFrame = es.toDF("src", "dst")
+
+  /** Triangle 1-2-3 with a pendant chain 3-4-...-(3+len). */
+  private def tail(len: Int): Seq[(Long, Long)] =
+    Seq((1L, 2L), (2L, 3L), (1L, 3L)) ++ (3L until 3L + len).map(i => (i, i + 1))
+
+  private def perRound(run: DataFrame => DataFrame, shallow: DataFrame,
+      deep: DataFrame, extraRounds: Int): Double = {
+    val a = jobs(run(shallow))
+    val b = jobs(run(deep))
+    info(s"jobs: shallow $a, deep $b, per round ${(b - a).toDouble / extraRounds}")
+    (b - a).toDouble / extraRounds
+  }
+
+  test("Checkpoint.observed costs the jobs of a bare localCheckpoint") {
+    val narrow = spark.range(0, 1000, 1, 4).toDF("x")
+    val shuffled = narrow.groupBy(col("x") % 7).agg(count(lit(1)).as("c"))
+    for (df <- Seq(narrow, shuffled)) {
+      val bare = jobs(df.localCheckpoint())
+      val helper = jobs(Checkpoint.observed(df, count(lit(1)), sum(col(df.columns.last))))
+      assert(helper === bare)
+    }
+  }
+
+  test("Checkpoint.observed returns exact aggregates, also on an empty frame") {
+    val df = spark.range(1, 101, 1, 4).toDF("x")
+    val (pinned, m) = Checkpoint.observed(df, count(lit(1)), sum(col("x")), min(col("x")))
+    assert((m.getLong(0), m.getLong(1), m.getLong(2)) === ((100L, 5050L, 1L)))
+    assert(pinned.count() === 100L)
+    val (ckEmpty, e) = Checkpoint.observed(df.where(lit(false)), count(lit(1)), sum(col("x")))
+    assert(e.getLong(0) === 0L && e.isNullAt(1))
+    assert(ckEmpty.isEmpty)
+    assert(Checkpoint.counted(spark.emptyDataFrame)._2 === 0L)
+    val (_, n) = Checkpoint.counted(df.groupBy(col("x") % 10).count())
+    assert(n === 10L)
+  }
+
+  test("KCore: documented jobs per peeling round") {
+    // k = 2 peels the chain one node per round: depth len
+    val pr = perRound(new KCore(2).vertices(_), edges(tail(2)), edges(tail(6)), 4)
+    assert(pr <= 5.0)
+  }
+
+  test("Coreness: documented jobs per refinement round") {
+    // the h-index fixpoint walks a pendant chain's values down one hop
+    // per round
+    val pr = perRound(new Coreness().run(_), edges(tail(2)), edges(tail(6)), 4)
+    assert(pr <= 4.0)
+  }
+
+  test("BfsDistance: documented jobs per frontier round") {
+    val seeds = Seq(1L).toDF("id")
+    val pr = perRound(new BfsDistance().run(_, seeds), edges(tail(2)), edges(tail(6)), 4)
+    assert(pr <= 5.0)
+  }
+
+  test("DensestSubgraph: documented jobs per peeling round") {
+    // a triangle peels empty in one round; K8 plus a chain takes two
+    // (DensestSubgraphSpec derives both)
+    val k8 = for (i <- 1L to 8L; j <- (i + 1) to 8L) yield (i, j)
+    val chain = (10L until 50L).map(i => (i, i + 1))
+    val pr = perRound(new DensestSubgraph().run(_),
+      edges(Seq((1L, 2L), (2L, 3L), (1L, 3L))), edges(k8 ++ chain), 1)
+    assert(pr <= 4.0)
+  }
+}
