@@ -36,8 +36,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   *
   * `cids` and `cents` must be same-length array literals; returns the
   * winning element of `cids` (LONG — every in-repo centroid producer
-  * carries a long cid), or null only when `cids` is empty (callers
-  * special-case the empty-centroid frame before building this).
+  * carries a long cid), or null when that element is null or `cids` is
+  * empty (callers special-case the empty-centroid frame before building
+  * this).
   */
 case class NearestCentroidId(vec: Expression, cids: Expression, cents: Expression)
     extends TernaryExpression {
@@ -67,7 +68,7 @@ case class NearestCentroidId(vec: Expression, cids: Expression, cents: Expressio
     val is = cids.eval(input).asInstanceOf[ArrayData]
     val cs = cents.eval(input).asInstanceOf[ArrayData]
     val j = NearestCentroidOps.nearestIndex(v.asInstanceOf[ArrayData], cs)
-    if (j < 0) null else is.getLong(j)
+    if (j < 0 || is.isNullAt(j)) null else is.getLong(j)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -85,7 +86,7 @@ case class NearestCentroidId(vec: Expression, cids: Expression, cents: Expressio
         long ${ev.value} = 0L;
         int $j = graft.sql.expressions.NearestCentroidOps.nearestIndex(
           ${vGen.isNull} ? null : ${vGen.value}, ${cGen.value});
-        if ($j < 0) { ${ev.isNull} = true; }
+        if ($j < 0 || ${iGen.value}.isNullAt($j)) { ${ev.isNull} = true; }
         else { ${ev.value} = ${iGen.value}.getLong($j); }
       """)
   }

@@ -187,6 +187,24 @@ class PlanAuditSpec extends SparkTestBase {
     }
   }
 
+  test("q36's pair stage: long signatures, distinct adds no exchange") {
+    // the verify step runs once per band collision (305,608 at sf0.1 for
+    // 1,364 verified pairs), so the signatures it xors must reach the join
+    // as longs parsed once per document, never as hex strings
+    val df = SparkEntry.queries("q36_simhash_pairs")(spark, dir)
+    df.collect()
+    // final adaptive plan: the spread shuffle and the band join's
+    // broadcast; the distinct rides the probe side's doc_id partitioning
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val exchanges = helper.collect(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e.nodeName
+    }
+    assert(exchanges.size === 2, df.queryExecution.executedPlan.toString)
+    val sigTypes = df.queryExecution.analyzed.collect { case p => p.output }.flatten
+      .filter(a => a.name == "sig_a" || a.name == "sig_b").map(_.dataType).distinct
+    assert(sigTypes === Seq(org.apache.spark.sql.types.LongType))
+  }
+
   test("flagship entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -90,4 +90,26 @@ class IvfAssignParitySpec extends SparkTestBase {
     assert(lists.count() === 10L)
     assert(lists.where(col("vec_id").isNull).count() === 0L)
   }
+
+  test("a null winning cid is null, not 0, interpreted and generated") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    import graft.sql.expressions.NearestCentroidId
+    val cents = Literal.create(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)),
+      ArrayType(ArrayType(DoubleType)))
+    val cids = Literal.create(Seq(7L, null), ArrayType(LongType))
+    def assign(v: Seq[Double]) =
+      NearestCentroidId(Literal.create(v, ArrayType(DoubleType)), cids, cents)
+    def generated(v: Seq[Double]): Any = {
+      val row = GenerateUnsafeProjection.generate(Seq(assign(v)))(InternalRow.empty)
+      if (row.isNullAt(0)) null else row.getLong(0)
+    }
+    // the second cell wins and its cid is null; the first wins with cid 7
+    assert(assign(Seq(0.0, 1.0)).eval() === null)
+    assert(generated(Seq(0.0, 1.0)) === null)
+    assert(assign(Seq(1.0, 0.0)).eval() === 7L)
+    assert(generated(Seq(1.0, 0.0)) === 7L)
+  }
 }
