@@ -20,12 +20,17 @@ import org.apache.spark.sql.types._
   *
   * Scale: `transform` is one `spread` shuffle (by id, only for inputs with
   * fewer files than cores) feeding the row-local [[graft.sql.expressions.SimHash64]]
-  * kernel. The pair search parses each signature to its 64-bit value once
-  * per document, explodes four 16-bit long slices of it as band keys, and
-  * broadcast-joins the band rows on them; each band collision then costs
-  * one xor + popcount (305,608 collisions for 1,364 pairs at sf0.1). The
-  * final `distinct` rides the probe side's id partitioning and adds no
-  * exchange.
+  * kernel. The pair search parses each signature to its 64-bit value and
+  * pins the (id, long) rows once per document, explodes four 16-bit long
+  * slices of it as band keys, and broadcast-joins the band rows on them;
+  * each band collision then costs one xor + popcount (305,608 collisions
+  * for 1,364 pairs at sf0.1). The pin keeps the kernel at one evaluation
+  * per document: without it, the band join's inferred `isnotnull(chunk)`
+  * is pushed through Generate, Project and the spread repartition into
+  * the scan, which signs every document on a single task, and each join
+  * side signs it again (q36 at sf0.1: ~2.5 core-s of tasks unpinned,
+  * ~1.3 pinned). The pinned frame reports no id partitioning, so the
+  * final `distinct` adds a hash exchange.
   */
 class SimHasher(override val uid: String) extends Transformer
     with DefaultParamsWritable {
@@ -73,12 +78,14 @@ class SimHasher(override val uid: String) extends Transformer
   def hammingDistance(a: Column, b: Column): Column = popXor(sigBits(a), sigBits(b))
 
   /** (id, band, chunk, sig): the signature parsed once per document to its
-    * long `sig`, then exploded into four bands whose `chunk` is the 16-bit
+    * long `sig` and pinned by an eager `localCheckpoint` (see Scale in the
+    * class doc), then exploded into four bands whose `chunk` is the 16-bit
     * slice holding hex chars `4*band+1 .. 4*band+4`. `sig` rides along so
     * pair consumers need no join back.
     */
   private def bands(signed: DataFrame): DataFrame =
     signed.select(col($(idCol)), sigBits(col($(outputCol))).as("sig"))
+      .localCheckpoint()
       .select(col($(idCol)), col("sig"), explode(expr("sequence(0, 3)")).as("band"))
       .select(col($(idCol)), col("band"),
         expr("shiftrightunsigned(sig, 48 - 16 * band) & 65535").as("chunk"),
@@ -89,6 +96,9 @@ class SimHasher(override val uid: String) extends Transformer
     * The long signatures ride through the band join, so there is no join
     * back to the corpus; each band collision is verified by one xor +
     * popcount on them, then surviving pairs dedup on (id_a, id_b, hamming).
+    * Runs jobs when called: the checkpoint that pins each signature once
+    * before the band join (see Scale), 2 jobs for a `transform` output
+    * whose input was spread (its map stage, then the checkpoint).
     */
   def nearDupPairs(signed: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist <= 3, s"banding only guarantees completeness for maxDist <= 3, got $maxDist")
@@ -102,6 +112,7 @@ class SimHasher(override val uid: String) extends Transformer
 
   /** Pairs of ids whose signatures agree on at least one of the four 16-bit
     * bands — a superset of all pairs with Hamming distance ≤ 3.
+    * Runs the same 2 pinning jobs when called as [[nearDupPairs]].
     */
   def candidatePairs(signed: DataFrame): DataFrame =
     graft.sql.PairJoins.bucketedSelfPairs(

@@ -34,7 +34,10 @@ object PairJoins {
     // CPU across all three LSH callers (q22 30->94 s, q36 63->126 s) —
     // these bucket frames are cheap to recompute and the forced
     // shuffle+sort-merge costs more than the duplicate derivation saves.
-    // Kept unkeyed: the planner broadcasts one side.
+    // Kept unkeyed: the planner broadcasts one side. The q36 figure
+    // predates SimHasher's xor + popcount verify. A caller whose bucket
+    // derivation dominates pins it before calling (SimHasher
+    // localCheckpoints its signatures), so both sides read it once.
     val a = buckets.select(col(idCol).as("id_a") +: keyCols.map(col) ++:
       payload.map(c => col(c).as(s"${c}_a")): _*)
     val b = buckets.select(col(idCol).as("id_b") +: keyCols.map(col) ++:

@@ -1,9 +1,19 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import graft.sql.expressions.SimHash64
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Plan-quality regression guard over EVERY query in SparkEntry: no
   * cartesian products, no unpartitioned (single-task) window sorts, and no
   * expensive expressions (regexp / split / higher-order lambdas / UDFs)
-  * landing in a scan's DataFilters — the classic 100TB scale-killers.
+  * landing in a scan's DataFilters — the classic 100TB scale-killers —
+  * and no signature kernel inside a `Filter` node.
   * (BroadcastNestedLoopJoin is allowed: it appears only for intentionally
   * broadcast one-row totals and broadcast probe sets.)
   *
@@ -32,7 +42,25 @@ class PlanAuditSpec extends SparkTestBase {
   private val expensiveInScan =
     Seq("regexp_replace(", "regexp_extract(", "rlike", "split(",
       "lambdafunction(", "zip_with(", "UDF(", "pythonUDF", "shingles(",
-      "minhashsignature(", "hyperplanesignature(", "simhash")
+      "minhash_signature(", "hyperplane_signature(", "simhash")
+
+  /** The row-local signature kernels, as their plans print them. A
+    * physical `Filter` over one of them re-runs the kernel wherever the
+    * optimizer pushed it: an equi-join on a key derived from a nullable
+    * kernel gets an inferred `isnotnull(key)` that Catalyst pushes below
+    * repartitions into the scan stage, where a single-split input signs
+    * every row on one task (q36 before its signatures were pinned).
+    */
+  private val signatureKernels =
+    Seq("simhash64(", "minhash_signature(", "hyperplane_signature(")
+
+  // a physical plan line whose node (after the tree art and the codegen
+  // stage id) is a Filter
+  private val filterNode = """^[\s:|+\-*()\d]*Filter """.r
+
+  private def kernelFilters(plan: String): Seq[String] =
+    plan.linesIterator.filter(l => filterNode.findPrefixOf(l).nonEmpty &&
+      signatureKernels.exists(l.contains)).map(_.trim).toSeq
 
   private def hasInferredGenerateClone(filters: String): Boolean =
     filters.contains("size(") && filters.contains("> 0") &&
@@ -63,7 +91,7 @@ class PlanAuditSpec extends SparkTestBase {
       case _ => None
     }.toSeq
 
-  /** The three audit assertions, callable on any plan string (the
+  /** The audit assertions, callable on any plan string (the
     * per-query loop below, plus targeted audits of plans the queries hide
     * behind lineage-truncating pins).
     */
@@ -103,6 +131,10 @@ class PlanAuditSpec extends SparkTestBase {
         .toSeq
       assert(dirtyScans.isEmpty,
         s"InferFiltersFromGenerate clone in scan DataFilters of $name:\n${dirtyScans.mkString("\n")}")
+      val filtered = kernelFilters(plan)
+      assert(filtered.isEmpty,
+        s"signature kernel inside a Filter in $name (materialize the kernel's " +
+          s"output before the join that infers the filter):\n${filtered.mkString("\n")}")
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -187,19 +219,56 @@ class PlanAuditSpec extends SparkTestBase {
     }
   }
 
-  test("q36's pair stage: long signatures, distinct adds no exchange") {
+  /** (result of `body`, every physical plan it executed, in order): the
+    * builder's eager jobs (a `localCheckpoint`) as well as its actions.
+    */
+  private def executing[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      drainListenerBus()
+      (result, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("q36's pair stage: signed once, long signatures, distinct hashes its own keys") {
+    val helper = new AdaptiveSparkPlanHelper {}
+    val (df, plans) = executing {
+      val q = SparkEntry.queries("q36_simhash_pairs")(spark, dir)
+      q.collect()
+      q
+    }
+    // the kernel must run once per document: one plan node across the
+    // checkpoint and the final plan (reused exchanges are leaves here), and
+    // never in a Filter, where an inferred isnotnull re-signs every row
+    val signing = plans.flatMap(p => helper.collect(p) {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[SimHash64])) => n
+    })
+    assert(signing.size === 1, signing.map(_.simpleString(10)).mkString("\n"))
+    assert(!signing.head.isInstanceOf[FilterExec], signing.head.simpleString(10))
+    // the final plan reads the pinned signatures: the spread exchange ran in
+    // the checkpoint job, the band join broadcasts one side, and the
+    // distinct hashes on its own keys (the pin reports no doc_id
+    // partitioning for it to ride)
+    val exchanges = helper.collect(df.queryExecution.executedPlan) {
+      case _: BroadcastExchangeExec => "broadcast"
+      case s: ShuffleExchangeExec => s.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.map(_.references.map(_.name).mkString).mkString("hash(", ", ", ")")
+        case other => other.getClass.getSimpleName
+      }
+    }
+    assert(exchanges.sorted === Seq("broadcast", "hash(id_a, id_b, hamming)"),
+      df.queryExecution.executedPlan.toString)
     // the verify step runs once per band collision (305,608 at sf0.1 for
     // 1,364 verified pairs), so the signatures it xors must reach the join
     // as longs parsed once per document, never as hex strings
-    val df = SparkEntry.queries("q36_simhash_pairs")(spark, dir)
-    df.collect()
-    // final adaptive plan: the spread shuffle and the band join's
-    // broadcast; the distinct rides the probe side's doc_id partitioning
-    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val exchanges = helper.collect(df.queryExecution.executedPlan) {
-      case e: org.apache.spark.sql.execution.exchange.Exchange => e.nodeName
-    }
-    assert(exchanges.size === 2, df.queryExecution.executedPlan.toString)
     val sigTypes = df.queryExecution.analyzed.collect { case p => p.output }.flatten
       .filter(a => a.name == "sig_a" || a.name == "sig_b").map(_.dataType).distinct
     assert(sigTypes === Seq(org.apache.spark.sql.types.LongType))

@@ -22,4 +22,14 @@ abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val sqlc = spark.sqlContext
   def sc = spark.sparkContext
+
+  /** Blocks until every queued listener event has been delivered, so a
+    * listener's counts are final. SparkContext.listenerBus is
+    * private[spark]; Bench drains it the same way.
+    */
+  def drainListenerBus(): Unit = {
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+      .invoke(bus, java.lang.Long.valueOf(10000L))
+  }
 }

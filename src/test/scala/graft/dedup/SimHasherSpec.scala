@@ -9,7 +9,8 @@ import graft.SparkTestBase
   * xor of the parsed hex. The corpus holds exact copies (distance 0),
   * suffix-mutated copies (a few flipped bits), a null-text row (no
   * signature, never paired) and signatures whose first hex digit is
-  * `8`–`f` (negative as a signed long).
+  * `8`–`f` (negative as a signed long). Empty and all-null-text inputs
+  * give no pairs.
   */
 class SimHasherSpec extends SparkTestBase {
   import spark.implicits._
@@ -84,6 +85,25 @@ class SimHasherSpec extends SparkTestBase {
     val nul = Seq(("8000000000000000", null: String)).toDF("a", "b")
       .select(hasher.hammingDistance(col("a"), col("b"))).head()
     assert(nul.isNullAt(0))
+  }
+
+  test("pair methods on an empty frame and on all-null texts: no rows, same schema") {
+    val pairSchema = hasher.nearDupPairs(signed, 3).schema
+    val candSchema = hasher.candidatePairs(signed).schema
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val nulls = Seq((1L, null: String), (2L, null: String), (3L, null: String))
+      .toDF("doc_id", "text")
+    for ((what, in) <- Seq("empty" -> empty, "all-null" -> nulls)) {
+      val s = hasher.transform(in)
+      // the pair methods pin the signatures when called, so a failure on
+      // these inputs would surface here, before any action
+      val pairs = hasher.nearDupPairs(s, 3)
+      val cands = hasher.candidatePairs(s)
+      assert(pairs.schema === pairSchema, what)
+      assert(cands.schema === candSchema, what)
+      assert(pairs.collect().isEmpty, what)
+      assert(cands.collect().isEmpty, what)
+    }
   }
 
   test("maxDist above 3 is refused: banding is only complete up to 3") {

@@ -31,20 +31,12 @@ class CheckpointJobsSpec extends SparkTestBase {
     sc.addJobTag(tag)
     try {
       body
-      drain()
+      drainListenerBus()
       n.get
     } finally {
       sc.removeJobTag(tag)
       sc.removeSparkListener(listener)
     }
-  }
-
-  // SparkContext.listenerBus is private[spark]; the bench drains it the
-  // same way
-  private def drain(): Unit = {
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-      .invoke(bus, java.lang.Long.valueOf(10000L))
   }
 
   private def edges(es: Seq[(Long, Long)]): DataFrame = es.toDF("src", "dst")
