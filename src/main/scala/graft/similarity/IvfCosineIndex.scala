@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sql.functions.cosineSimilarity
+import graft.sql.functions.{cosineSimilarity, vectorMean}
 
 /** IVF (inverted-file) approximate cosine search: a coarse quantizer
   * clusters the corpus, each vector is listed under its nearest centroid,
@@ -46,17 +46,11 @@ class IvfCosineIndex(
     graft.sql.functions.spread(
       candidates.select(col(idCol), dvec(col(vecCol)).as("cv")), col(idCol))
 
-  /** The row-local nearest-centroid column (see
-    * [[graft.sql.expressions.NearestCentroidId]]) against the COLLECTED
-    * centroid set — centroids are driver-tiny by contract (numCentroids
-    * rows, the same bound the previous `broadcast(cents)` relied on).
-    * None when the set is empty. r17 (guide §2.4): the previous
-    * `crossJoin(broadcast) → groupBy(id).max_by → join-back` shape paid an
-    * argmax shuffle plus a corpus-side join-back shuffle on EVERY
-    * assignment pass (bootstrap, each micro-batch append, each Lloyd
-    * step); the expression replicates `max_by(cid, struct(cos, -cid))`
-    * bit-exactly (same cosine loop, same tie/NaN/null ordering) with zero
-    * shuffles.
+  /** The centroid set collected to the driver, sorted by cid (nulls
+    * last); centroids are driver-tiny by contract (numCentroids rows).
+    * Every assignment and probe reads its cells from such a snapshot as
+    * literals: [[graft.sql.expressions.NearestCentroidId]] replicates
+    * `max_by(cid, struct(cos, -cid))` bit-exactly, with no shuffle.
     */
   private def collectCells(cents: DataFrame) =
     cents.select(col("cid").cast("long"),
@@ -99,9 +93,7 @@ class IvfCosineIndex(
   }
 
   /** The corpus frame with a row-local `cid` column; empty (same schema)
-    * when the centroid set is empty — the previous crossJoin shape joined
-    * nothing against an empty broadcast.
-    */
+    * when the centroid set is empty. */
   private def withNearest(e: DataFrame, cents: DataFrame): DataFrame =
     nearestCidCol(cents) match {
       case Some(c) => e.withColumn("cid", c)
@@ -133,28 +125,24 @@ class IvfCosineIndex(
     // pick the same seed id keys would.
     val seeds = Seeding.kLowestIdRanks(e, idCol, numCentroids, "cid")
       .select(col("cid"), col("cv").as("centroid"))
-    // row-local seed assignment (r17): the old e.join(assign(e, seeds),
-    // idCol) paid the argmax shuffle + a join-back; the null-id filter
-    // replicates the equi-join's drop of null-id rows from the Lloyd means
+    // row-local seed assignment; rows with a null id stay out of the means
     val members = withNearest(e, seeds).where(col(idCol).isNotNull)
-    dim match {
-      // known dimensionality: one partial-aggregated groupBy of d scalar
-      // avgs — no per-component explode, no second shuffle
-      case Some(d) =>
-        members.groupBy(col("cid"))
-          .agg(array((0 until d).map(i => avg(col("cv")(i))): _*).as("centroid"))
-      // unknown dimensionality: per-(cid, pos) means then re-assembly
-      case None =>
-        members
-          .select(col("cid"), posexplode(col("cv")))
-          .groupBy(col("cid"), col("pos")).agg(avg(col("col")).as("m"))
-          .groupBy(col("cid"))
-          .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)")
-            .as("centroid"))
-    }
+    // one groupBy(cid), one shuffle, whether `dim` is known or not (see
+    // VectorMean for the length contract); with `None` a cell whose
+    // members hold no element at all has a null mean and no centroid
+    members.groupBy(col("cid"))
+      .agg(vectorMean(col("cv"), dim).as("centroid"))
+      .where(col("centroid").isNotNull)
   }
 
-  /** Inverted lists: (id, cid) under the refined centroids. */
+  /** Inverted lists: (id, cid) under the refined centroids.
+    *
+    * Eager: the call trains the centroids and collects them to the
+    * driver; the returned frame assigns against that snapshot and never
+    * retrains. Cardinality: one row per input row — ids are not
+    * deduplicated, a null id keeps its row, a null vector gets the lowest
+    * cid.
+    */
   def index(candidates: DataFrame): DataFrame = {
     val e = corpus(candidates)
     assign(e, centroids(candidates))
@@ -213,6 +201,11 @@ class IvfCosineIndex(
     * quantizer re-training, no rescan of the indexed corpus. (Centroids
     * drift as the corpus grows; rebuild cadence is the caller's policy —
     * the standard IVF operational trade.)
+    *
+    * Eager: `index.centroids` is collected when this is called, and the
+    * returned frame assigns against that snapshot; a later rewrite of the
+    * data behind `index.centroids` is not seen. Cardinality: one row per
+    * row of `vectors`, as in [[index]].
     */
   def assignNew(index: IvfIndex, vectors: DataFrame): DataFrame =
     assign(corpus(vectors),
@@ -227,7 +220,8 @@ class IvfCosineIndex(
       index.lists.unionByName(listRows(vectors, index.centroids)))
 
   /** Inverted-list rows (id, cv, cid) of `vectors` under EXISTING
-    * centroids — one broadcast-centroid pass, no training. The unit of
+    * centroids, collected when this is called (the eager snapshot of
+    * [[assignNew]]) — one pass, no training, null ids dropped. The unit of
     * incremental index growth: [[append]] unions these into a held index,
     * [[graft.streaming.IvfStreamMaintainer]] writes them straight into a
     * saved layout per micro-batch.
@@ -235,9 +229,6 @@ class IvfCosineIndex(
   def listRows(vectors: DataFrame, cents: DataFrame): DataFrame = {
     val c = cents.select(col("cid"), dvec(col("centroid")).as("centroid"))
     val e = corpus(vectors)
-    // row-local cid (r17) — the old e.join(assign(e, c), idCol) re-keyed
-    // the corpus by id just to attach a column computable in place; the
-    // null-id filter replicates the equi-join's drop of null-id rows
     withNearest(e, c).where(col(idCol).isNotNull)
       .select(col(idCol), col("cv"), col("cid"))
   }
@@ -245,6 +236,11 @@ class IvfCosineIndex(
   /** (query_id, qv, cid): each query's `nprobe` nearest cells — the probe
     * set every IVF-family search starts from (shared by [[search]] and
     * IVF-PQ compositions).
+    *
+    * Eager: `index.centroids` is collected when this is called, and the
+    * probe cells are chosen against that snapshot. Cardinality: each
+    * query row yields min(`nprobe`, cells) rows (none for an empty
+    * centroid set); query ids are not deduplicated.
     */
   def probes(queries: DataFrame, index: IvfIndex): DataFrame = {
     val qv = queries.select(col(idCol).as("query_id"), dvec(col(vecCol)).as("qv"))

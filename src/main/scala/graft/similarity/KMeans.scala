@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sql.functions.squaredL2
+import graft.sql.functions.vectorMean
 
 /** Fixed-iteration distributed k-means (Lloyd's algorithm) under squared
   * L2 — the "more Lloyd refinement steps" production knob that
@@ -24,13 +24,14 @@ import graft.sql.functions.squaredL2
   * member keeps its previous centroid (the standard empty-cluster guard —
   * without it the next assignment would silently drop a cid).
   *
-  * Scale, per iteration: centroids are k rows, broadcast; assignment is
-  * ONE streamed pass over the corpus whose argmin partial-aggregates
-  * map-side (`min_by`, no per-vector window), and the new means are one
-  * partial-aggregated groupBy of `dim` scalar avgs — no per-component
-  * explode. The corpus is scanned `iters + 1` times total (the inherent
-  * Lloyd cost) and never shuffled on anything wider than (cid, d scalar
-  * sums); centroids are localCheckpoint-ed per round so the final plan's
+  * Scale, per iteration: centroids are k literal rows; assignment is a
+  * row-local argmin in ONE streamed pass over the corpus, and the new
+  * means are one partial-aggregated groupBy(cid) of one
+  * [[graft.sql.functions.vectorMean]]: a buffer of `dim` sums and `dim`
+  * counts per cell, two fields wide at any `dim`. The corpus is scanned
+  * `iters + 1` times total (the inherent Lloyd cost) and shuffles only
+  * the k partial means per task; centroids are localCheckpoint-ed per
+  * round so the final plan's
   * lineage stays flat no matter how many iterations ran. Exactly the
   * fixed-iteration contract [[graft.graph.PageRank]] uses: run length
   * never depends on float-drift convergence tests.
@@ -168,9 +169,7 @@ class KMeans(
     var cells = cellLiterals(cents)
     require(!cells._1, "cannot fit k-means on an empty vector column")
     for (r <- 0 until iters) {
-      // row-local assignment (r17): the old e.join(assignCv(e, cents)
-      // .select(id, cid), idCol) paid the argmax shuffle + a join-back per
-      // round; the null-id filter replicates the equi-join's null drop
+      // row-local assignment; rows with a null id stay out of the means
       if (r > 0) cells = cellLiterals(cents)
       val (_, cidLit, centLit) = cells
       val means = e.where(col(idCol).isNotNull)
@@ -179,7 +178,7 @@ class KMeans(
             org.apache.spark.sql.GraftBridge.expression(col("cv")), cidLit, centLit)))
         .select(col("b.cid").as("cid"), col("cv"))
         .groupBy(col("cid"))
-        .agg(array((0 until dim).map(i => avg(col("cv")(i))): _*).as("m"))
+        .agg(vectorMean(col("cv"), Some(dim)).as("m"))
       cents = cents.as("c")
         .join(means.as("n"), Seq("cid"), "left")
         .select(col("cid"), coalesce(col("n.m"), col("c.centroid")).as("centroid"))

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * add the same terms in the same order.
   *
   * Scale: codebooks are m×k rows (broadcast); training is one streamed
-  * assignment pass + one partial-aggregated mean per (subspace, code,
-  * pos); encoding is row-local against the broadcast codebook. Nothing
+  * assignment pass + one partial-aggregated vector mean per (subspace,
+  * code); encoding is row-local against the broadcast codebook. Nothing
   * shuffles but the tiny codebook aggregation. ADC query scoring
   * ([[adcSearch]]) builds a per-query distance table (m×k entries) and
   * scores codes with lookups — never touching raw vectors.
@@ -73,7 +73,7 @@ class ProductQuantizer(
     val assigned = assign(s, seeds)
     val means = s.join(assigned, Seq(idCol, "sub"))
       .groupBy(col("sub"), col("code"))
-      .agg(array((0 until subDim).map(i => avg(col("slice")(i))): _*).as("mean"))
+      .agg(graft.sql.functions.vectorMean(col("slice"), Some(subDim)).as("mean"))
     // empty-cluster guard: a seed whose slice ties with a lower-code
     // identical slice wins no members (argmin ties to the lowest code)
     // and would vanish from the groupBy, breaking the documented

@@ -123,6 +123,19 @@ object functions {
     when(size(arr) < k, size(arr).cast("double"))
       .otherwise(lit((k - 1).toDouble * 72057594037927936.0) / element_at(arr, k))
 
+  /** Per-position mean aggregate of an array column (custom
+    * [[graft.sql.expressions.VectorMean]] TypedImperativeAggregate):
+    * `avg(c[i])` for every position i in one buffer of d sums and d
+    * counts. The input is cast to ARRAY&lt;DOUBLE&gt;, as `avg` casts its
+    * argument. `dim = Some(d)` requires every non-null vector to have d
+    * elements; `None` averages up to the longest vector.
+    */
+  def vectorMean(c: Column, dim: Option[Int]): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      graft.sql.expressions.VectorMean(
+        org.apache.spark.sql.GraftBridge.expression(c.cast("array<double>")), dim)
+        .toAggregateExpression())
+
   /** Bottom-k uniform sample aggregate (custom
     * [[graft.sql.expressions.BottomKSample]] TypedImperativeAggregate):
     * the k distinct values with the smallest 56-bit md5 hashes, in hash

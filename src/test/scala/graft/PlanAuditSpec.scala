@@ -4,8 +4,9 @@ import scala.jdk.CollectionConverters._
 
 import graft.sql.expressions.SimHash64
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -13,7 +14,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * cartesian products, no unpartitioned (single-task) window sorts, and no
   * expensive expressions (regexp / split / higher-order lambdas / UDFs)
   * landing in a scan's DataFilters — the classic 100TB scale-killers —
-  * and no signature kernel inside a `Filter` node.
+  * no signature kernel inside a `Filter` node, and no hash aggregate too
+  * wide for whole-stage codegen in any plan the query runs while it is
+  * built or in its final plan.
   * (BroadcastNestedLoopJoin is allowed: it appears only for intentionally
   * broadcast one-row totals and broadcast probe sets.)
   *
@@ -137,9 +140,35 @@ class PlanAuditSpec extends SparkTestBase {
           s"output before the join that infers the filter):\n${filtered.mkString("\n")}")
   }
 
+  /** `HashAggregateExec` nodes whose input or output has more fields than
+    * `spark.sql.codegen.maxFields`: whole-stage codegen skips such a node
+    * and runs it outside generated code. A per-position fan-out
+    * `array(avg(c[0]), ..., avg(c[63]))` is 129 fields (two buffer slots
+    * per avg plus the key); it cost each k-means round of q119 about 8×
+    * the executor time of the one-buffer `vectorMean`.
+    */
+  private def wideAggregates(plan: SparkPlan): Seq[String] = {
+    val conf = spark.sessionState.conf
+    def tooWide(p: SparkPlan) = WholeStageCodegenExec.isTooManyFields(conf, p.schema)
+    new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case a: HashAggregateExec if tooWide(a) || a.children.exists(tooWide) =>
+        s"in=${a.children.map(_.schema.length).mkString(",")} " +
+          s"out=${a.schema.length}: ${a.simpleString(3)}"
+    }
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name: no cartesian, no unpartitioned window, clean scan filters") {
-      auditPlan(name, fn(spark, dir).queryExecution.executedPlan.toString)
+      // the build's own jobs (loops, checkpoints, collects) run plans the
+      // final plan never shows, so the width audit covers those too
+      val (df, built) = executing(fn(spark, dir))
+      val plan = df.queryExecution.executedPlan
+      auditPlan(name, plan.toString)
+      val wide = (built :+ plan).flatMap(wideAggregates)
+      assert(wide.isEmpty,
+        s"hash aggregate wider than spark.sql.codegen.maxFields " +
+          s"(${spark.sessionState.conf.wholeStageMaxNumFields}) in $name — " +
+          s"it leaves whole-stage codegen:\n${wide.mkString("\n")}")
     }
   }
 
