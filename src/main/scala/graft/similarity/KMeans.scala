@@ -1,6 +1,7 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 import graft.sql.functions.vectorMean
@@ -24,17 +25,17 @@ import graft.sql.functions.vectorMean
   * member keeps its previous centroid (the standard empty-cluster guard —
   * without it the next assignment would silently drop a cid).
   *
-  * Scale, per iteration: centroids are k literal rows; assignment is a
-  * row-local argmin in ONE streamed pass over the corpus, and the new
-  * means are one partial-aggregated groupBy(cid) of one
-  * [[graft.sql.functions.vectorMean]]: a buffer of `dim` sums and `dim`
-  * counts per cell, two fields wide at any `dim`. The corpus is scanned
-  * `iters + 1` times total (the inherent Lloyd cost) and shuffles only
-  * the k partial means per task; centroids are localCheckpoint-ed per
-  * round so the final plan's
-  * lineage stays flat no matter how many iterations ran. Exactly the
-  * fixed-iteration contract [[graft.graph.PageRank]] uses: run length
-  * never depends on float-drift convergence tests.
+  * Scale, per iteration: centroids are k driver rows, passed to the round
+  * as array literals (hence `k * dim` ≤ [[KMeans.MaxCentroidValues]]);
+  * assignment is a row-local argmin in ONE streamed pass over the corpus,
+  * and the new means are one partial-aggregated groupBy(cid) of one
+  * [[graft.sql.functions.vectorMean]] (two buffer fields at any `dim`),
+  * collected: one collect per round, no checkpoint, no join. The corpus is
+  * scanned `iters + 1` times (the inherent Lloyd cost) and shuffles only
+  * the k partial means per task. Every fit returns a local (cid,
+  * centroid) frame, so no Lloyd lineage reaches the caller's plan. Run
+  * length is fixed, as in [[graft.graph.PageRank]]: it never depends on
+  * float-drift convergence tests.
   */
 class KMeans(
     k: Int,
@@ -45,14 +46,18 @@ class KMeans(
   require(k > 0, "k must be positive")
   require(iters >= 0, "iters must be non-negative")
   require(dim > 0, "dim must be positive")
+  require(k.toLong * dim <= KMeans.MaxCentroidValues,
+    s"k * dim (k = $k, dim = $dim) exceeds ${KMeans.MaxCentroidValues}: " +
+      "centroids are driver rows and a literal in every round's plan")
+
+  private def projected(vectors: DataFrame): DataFrame =
+    vectors.select(col(idCol), col(vecCol).cast("array<double>").as("cv"))
 
   /** (id, cv) spread to full parallelism: each assignment row evaluates k
     * distance kernels, which a single-split input would serialize.
     */
   private def corpus(vectors: DataFrame): DataFrame =
-    graft.sql.functions.spread(
-      vectors.select(col(idCol), col(vecCol).cast("array<double>").as("cv")),
-      col(idCol))
+    graft.sql.functions.spread(projected(vectors), col(idCol))
 
   /** Farthest-point (k-center greedy) seeds: seed 0 = the lowest-id
     * vector, each next seed = the point with the LARGEST squared distance
@@ -60,32 +65,24 @@ class KMeans(
     * classic deterministic cure for Lloyd's local optima under degenerate
     * init — [[KMeansIvfSpec]] shows lowest-id seeding converging to a
     * doubled-up cell that no amount of Lloyd fixes, while these seeds land
-    * one per planted cluster. Costs k-1 extra corpus passes (each one
-    * broadcast-seed scan + a top-1 TakeOrdered, no shuffle) — the same
-    * cost class as the Lloyd iterations themselves.
+    * one per planted cluster. Costs k-1 extra corpus passes (each a
+    * row-local min-distance + a top-1 collect) — the same cost class as
+    * the Lloyd iterations themselves.
     */
-  def seedsFarthest(vectors: DataFrame): DataFrame = {
+  def seedsFarthest(vectors: DataFrame): DataFrame =
+    centroidFrame(vectors, farthestRows(vectors), refined = false)
+
+  private def farthestRows(vectors: DataFrame): Array[Row] = {
+    def top1(ordered: DataFrame, cid: Long) =
+      ordered.limit(1).select(lit(cid).as("cid"), col("cv")).collect()
     val e = corpus(vectors)
-    var chosen = e.orderBy(col(idCol)).limit(1)
-      .select(lit(0L).as("cid"), col("cv").as("centroid"))
-      .localCheckpoint()
-    for (i <- 1 until k) {
-      // row-local min-distance (r17): the old crossJoin + groupBy(id)
-      // .agg(min(d2), first(cv)) shuffled the whole corpus per seed round
-      // to compute a per-row reduction; MinSquaredL2 replicates SQL min
-      // (nulls ignored, NaN largest) in place, leaving only the top-1
-      // TakeOrdered — note the old groupBy emitted one row per DISTINCT
-      // id, which for the unique-id corpora every caller feeds is the
-      // same row set
-      val (_, _, centLit) = cellLiterals(chosen)
-      val next = e
-        .withColumn("md", org.apache.spark.sql.GraftBridge.column(
+    var chosen = top1(projected(vectors).orderBy(col(idCol)), 0L)
+    for (i <- 1 until k if chosen.nonEmpty)
+      // MinSquaredL2 replicates SQL min (nulls ignored, NaN largest)
+      chosen ++= top1(e.withColumn("md", org.apache.spark.sql.GraftBridge.column(
           graft.sql.expressions.MinSquaredL2(
-            org.apache.spark.sql.GraftBridge.expression(col("cv")), centLit)))
-        .orderBy(col("md").desc, col(idCol)).limit(1)
-        .select(lit(i.toLong).as("cid"), col("cv").as("centroid"))
-      chosen = chosen.unionByName(next).localCheckpoint()
-    }
+            org.apache.spark.sql.GraftBridge.expression(col("cv")), literals(chosen)._2)))
+        .orderBy(col("md").desc, col(idCol)), i.toLong)
     chosen
   }
 
@@ -94,97 +91,94 @@ class KMeans(
     * lowest-id seeds would start blind to.
     */
   def fitFarthest(vectors: DataFrame): DataFrame =
-    refine(corpus(vectors), seedsFarthest(vectors))
+    centroidFrame(vectors, refine(corpus(vectors), farthestRows(vectors)), iters > 0)
 
-  /** Seed centroids (cid, centroid): the k lowest-id vectors, cid = the
-    * seed's dense 0-based rank in id order via the tiny triangle
-    * self-join (k rows) — no global window node.
+  /** Seed centroids (cid, centroid): the k lowest non-null-id vectors,
+    * cid = the dense 0-based rank of the id among the DISTINCT seed ids,
+    * ranked on the driver from one top-k collect.
     */
   def seeds(vectors: DataFrame): DataFrame =
-    Seeding.kLowestIdRanks(corpus(vectors), idCol, k, "cid")
-      .select(col("cid"), col("cv").as("centroid"))
+    centroidFrame(vectors, seedRows(vectors), refined = false)
 
-  /** The collected (driver-tiny, k rows — the same bound
-    * `broadcast(centroids)` relied on) cell set as array literals for the
-    * row-local assignment expressions (r17, guide §2.4 — the previous
-    * crossJoin → groupBy(id).min_by → join-back shape paid an argmax
-    * shuffle plus a corpus join-back per Lloyd round).
+  private def seedRows(vectors: DataFrame): Array[Row] = {
+    val top = projected(vectors).where(col(idCol).isNotNull)
+      .orderBy(col(idCol)).limit(k).collect()
+    // `==` equates -0.0 with 0.0 and `equals` NaN with NaN, as Spark does
+    val same = (a: Any, b: Any) => a == b || java.util.Objects.equals(a, b)
+    val ranks = top.indices.scanLeft(-1L)((r, i) =>
+      if (i > 0 && same(top(i).get(0), top(i - 1).get(0))) r else r + 1).tail
+    top.zip(ranks).map { case (r, rank) => Row(rank, r.get(1)) }
+  }
+
+  /** A (cid, centroid) row set as cid-ordered (cids, centroids) array
+    * literals for the row-local assignment expressions.
     */
-  private def cellLiterals(centroids: DataFrame) = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
+  private def literals(cells: Array[Row]): (Literal, Literal) = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
-    val rows = centroids.select(col("cid").cast("long"),
-      col("centroid").cast("array<double>").as("centroid")).collect()
-      .sortBy(r => (r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0)))
-    (rows.isEmpty,
-      Literal.create(rows.map(r =>
-        if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))).toSeq,
+    val rows = cells.sortBy(r => (r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0)))
+    (Literal.create(rows.map(r => if (r.isNullAt(0)) null else Long.box(r.getLong(0))).toSeq,
         ArrayType(LongType)),
-      Literal.create(rows.map(r =>
-        if (r.isNullAt(1)) null else r.getSeq[Double](1)).toSeq,
+      Literal.create(rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Double](1)).toSeq,
         ArrayType(ArrayType(DoubleType))))
   }
 
+  /** `cvFrame` plus `b`: the nearest cell's (cid, d2) under squared L2. */
+  private def nearest(cvFrame: DataFrame, cells: Array[Row]): DataFrame = {
+    val (cidLit, centLit) = literals(cells)
+    cvFrame.withColumn("b", org.apache.spark.sql.GraftBridge.column(
+      graft.sql.expressions.NearestCellL2(
+        org.apache.spark.sql.GraftBridge.expression(col("cv")), cidLit, centLit)))
+  }
+
   /** (id, cid, d2): nearest centroid per vector under squared L2; ties to
-    * the lowest cid — computed row-locally against centroid literals
+    * the lowest cid — computed row-locally against the collected centroids
     * ([[graft.sql.expressions.NearestCellL2]] replicates the old
     * `min_by(struct(cid, d2), struct(d2, cid))` bit-exactly). PRECONDITION
     * (every declared query satisfies it): one row per non-null id — the
     * old groupBy(id) collapsed duplicate ids to one arbitrary-winner row.
     */
-  def assign(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    assignCv(corpus(vectors), centroids)
-
-  /** [[assign]] over an already-projected (id, cv) frame. */
-  private def assignCv(cvFrame: DataFrame, centroids: DataFrame): DataFrame = {
-    val (empty, cidLit, centLit) = cellLiterals(centroids)
-    if (empty)
+  def assign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
+    val cells = centroids.select(col("cid").cast("long"),
+      col("centroid").cast("array<double>")).collect()
+    if (cells.isEmpty)
       // the old crossJoin against an empty broadcast joined nothing
-      cvFrame.select(col(idCol), lit(null).cast("long").as("cid"),
+      corpus(vectors).select(col(idCol), lit(null).cast("long").as("cid"),
         lit(null).cast("double").as("d2")).where(lit(false))
-    else
-      cvFrame.withColumn("b", org.apache.spark.sql.GraftBridge.column(
-          graft.sql.expressions.NearestCellL2(
-            org.apache.spark.sql.GraftBridge.expression(col("cv")), cidLit, centLit)))
-        .select(col(idCol), col("b.cid").as("cid"), col("b.d2").as("d2"))
+    else nearest(corpus(vectors), cells)
+      .select(col(idCol), col("b.cid").as("cid"), col("b.d2").as("d2"))
   }
 
-  /** Centroids after `iters` Lloyd refinements of the seeds. Each round's
-    * k-row result is localCheckpoint-ed: the next round (and the caller's
-    * downstream plan) reuses the materialized rows instead of replaying
-    * every prior corpus pass.
-    */
+  /** Centroids after `iters` Lloyd refinements of the seeds. */
   def fit(vectors: DataFrame): DataFrame =
-    refine(corpus(vectors), seeds(vectors))
+    centroidFrame(vectors, refine(corpus(vectors), seedRows(vectors)), iters > 0)
 
-  /** The shared Lloyd loop: `iters` refinements of `initial` over the
-    * projected corpus `e`.
+  /** The Lloyd loop, the one place centroids are kept as driver rows:
+    * `iters` rounds over the projected corpus `e`, each collecting the k
+    * means. A row whose non-null cid got no (or a null) mean keeps its
+    * centroid — the empty-cluster guard; rows sharing a cid take its mean.
     */
-  private def refine(e: DataFrame, initial: DataFrame): DataFrame = {
-    var cents = initial.localCheckpoint()
+  private def refine(e: DataFrame, initial: Array[Row]): Array[Row] = {
     // the estimator contract shared with the other fits (LR, binning,
     // downsampling): a model fit on zero rows must fail loudly, never
-    // silently return a degenerate (here: centroid-less) model. The
-    // emptiness comes from round 1's literal collect, not a job of its own.
-    var cells = cellLiterals(cents)
-    require(!cells._1, "cannot fit k-means on an empty vector column")
-    for (r <- 0 until iters) {
-      // row-local assignment; rows with a null id stay out of the means
-      if (r > 0) cells = cellLiterals(cents)
-      val (_, cidLit, centLit) = cells
-      val means = e.where(col(idCol).isNotNull)
-        .withColumn("b", org.apache.spark.sql.GraftBridge.column(
-          graft.sql.expressions.NearestCellL2(
-            org.apache.spark.sql.GraftBridge.expression(col("cv")), cidLit, centLit)))
-        .select(col("b.cid").as("cid"), col("cv"))
-        .groupBy(col("cid"))
-        .agg(vectorMean(col("cv"), Some(dim)).as("m"))
-      cents = cents.as("c")
-        .join(means.as("n"), Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("n.m"), col("c.centroid")).as("centroid"))
-        .localCheckpoint()
+    // silently return a degenerate (here: centroid-less) model
+    require(initial.nonEmpty, "cannot fit k-means on an empty vector column")
+    (0 until iters).foldLeft(initial) { (cents, _) =>
+      // rows with a null id stay out of the means
+      val means = nearest(e.where(col(idCol).isNotNull), cents)
+        .groupBy(col("b.cid").as("cid")).agg(vectorMean(col("cv"), Some(dim)))
+        .collect().collect { case r if !r.anyNull => r.getLong(0) -> r.get(1) }.toMap
+      cents.map(r => if (r.isNullAt(0)) r else means.get(r.getLong(0)).fold(r)(Row(r.get(0), _)))
     }
-    cents
+  }
+
+  /** `rows` as a local frame: `cid` not null, `centroid` as nullable as
+    * `cv` and, once refined, typed as `coalesce(mean, cv)` — the schema a
+    * saved artifact (e.g. the q167 codebook) writes to parquet.
+    */
+  private def centroidFrame(vectors: DataFrame, rows: Array[Row], refined: Boolean): DataFrame = {
+    val cv = if (refined) coalesce(lit(null).cast("array<double>"), col("cv")) else col("cv")
+    val schema = projected(vectors).select(lit(0L).as("cid"), cv.as("centroid")).schema
+    vectors.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Per-cluster fit summary (cid, size, inertia): membership counts and
@@ -212,6 +206,12 @@ class KMeans(
   * (ArtifactPersistenceSpec pins this).
   */
 object KMeans {
+
+  /** Bound on `k * dim`, 2^18 doubles (2 MiB): centroids are driver rows
+    * and a literal in every round's plan. The largest caller, 256-code PQ
+    * codebooks over 8-dim slices, needs 2,048.
+    */
+  val MaxCentroidValues: Long = 1L << 18
 
   def saveCentroids(centroids: DataFrame, path: String): Unit =
     centroids.select(col("cid"), col("centroid"))

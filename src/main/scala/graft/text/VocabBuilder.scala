@@ -22,13 +22,13 @@ import graft.dedup.TextNormalizer
   * frequency value:
   *
   *  1. distributed wordcount → (term, c);
-  *  2. histogram over DISTINCT COUNT VALUES (Zipf: a few thousand rows even
-  *     for billion-type vocabularies) → per-frequency mass;
-  *  3. tiny-side triangle join gives each frequency group its
-  *     strictly-more-frequent exclusive mass;
-  *  4. groups entirely under the threshold admit ALL their terms with a
-  *     broadcast semi join — no ordering ever computed inside them (this is
-  *     what keeps the giant count=1 tail off a single task);
+  *  2. histogram over DISTINCT COUNT VALUES → per-frequency mass, collected
+  *     (n distinct counts need ≥ n(n+1)/2 tokens: at most √(2·tokens) rows);
+  *  3. on the driver, each group's strictly-more-frequent exclusive mass
+  *     and the threshold, in exact long arithmetic (an overflow fails);
+  *  4. groups entirely under the threshold admit ALL their terms with an
+  *     IN filter on their counts — no ordering ever computed inside them
+  *     (this is what keeps the giant count=1 tail off a single task);
   *  5. only the single boundary frequency group ranks its terms — and that
   *     rank is itself sharded over term-prefix buckets
   *     ([[graft.sql.GroupedNtile.rank]]), because the boundary is usually
@@ -43,58 +43,58 @@ class VocabBuilder(
   /** (term, c): the selected vocabulary with corpus frequencies. */
   def vocab(docs: Dataset[_]): DataFrame = {
     // explode_outer: keeps the tokenizer regexp chain out of scan filters
-    // (InferFiltersFromGenerate skips outer generates)
+    // (InferFiltersFromGenerate skips outer generates). Not spread: at
+    // sf0.1 a spread took q85 from 0.44 to 0.91 core-s of tasks for ~60 ms
+    // less wall (curation trace, 4 cores).
     val terms = docs
       .select(explode_outer(TextNormalizer.tokens(col(textCol))).as("term"))
       .where(col("term").isNotNull)
-    // materialize the wordcount once: four consumers reference it (histogram,
-    // total, full-group join, boundary join), and Spark re-executes a shared
-    // subtree per reference — without this the corpus is re-tokenized 4x
-    // (measured 28s -> 4s at 100k docs). State is vocab-sized (the same
-    // bounded-frame discipline as DedupClusters' label propagation).
+    // materialize the wordcount once: the histogram and both term branches
+    // read it, and Spark re-executes a shared subtree per reference —
+    // without this the corpus is re-tokenized per consumer (measured 28s ->
+    // 4s at 100k docs). State is vocab-sized (the same bounded-frame
+    // discipline as DedupClusters' label propagation).
     val counts = terms.groupBy(col("term")).agg(count(lit(1)).as("c"))
       .localCheckpoint()
 
-    // per-frequency histogram: mass = c * n_terms token occurrences;
-    // tiny (distinct count values), also referenced three times
+    // per-frequency histogram: mass = c * n_terms token occurrences
     val hist = counts.groupBy(col("c"))
       .agg(sum(col("c")).as("mass"), count(lit(1)).as("n_terms"))
-      .localCheckpoint()
-    val total = hist.agg(sum(col("mass")).cast("double").as("total"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val (full, boundary) = VocabBuilder.cutoff(hist, cover)
 
-    // exclusive mass of all strictly-more-frequent groups (triangle join on
-    // the tiny histogram), plus the coverage threshold as a broadcast scalar
-    val above = hist.as("x")
-      .join(hist.select(col("c").as("yc"), col("mass").as("ymass")),
-        col("yc") > col("x.c"), "left")
-      .groupBy(col("x.c").as("c"), col("x.n_terms").as("n_terms"))
-      .agg(coalesce(sum(col("ymass")), lit(0L)).as("cum_above"))
-      .crossJoin(broadcast(total))
-      .withColumn("thresh", col("total") * cover)
-
-    // a group is fully in iff its LAST term's exclusive cumulative is still
-    // under the threshold: cum_above + (n_terms - 1) * c < thresh
-    val lastExcl = col("cum_above") + (col("n_terms") - 1) * col("c")
-    val full = above.where(lastExcl < col("thresh")).select(col("c"))
-    val boundary = above
-      .where(col("cum_above") < col("thresh") && !(lastExcl < col("thresh")))
-      .select(col("c"), col("cum_above"), col("thresh"))
-
-    val fullTerms = counts.join(broadcast(full), "c").select(col("term"), col("c"))
-    // boundary group(s): alphabetic rank within the frequency tie decides
-    // the admitted prefix. In Zipfian corpora the boundary is typically the
+    val fullTerms = counts.where(col("c").isin(full: _*)).select(col("term"), col("c"))
+    // boundary group: alphabetic rank within the frequency tie decides the
+    // admitted prefix. In Zipfian corpora the boundary is typically the
     // count=1 tail — most of the vocabulary — so a window partitioned by
     // the single boundary count would serialize it through one task. The
     // rank is instead two-phase (GroupedNtile.rank) over 2-char term-prefix
     // buckets: prefix order is consistent with term order ([a-z0-9] terms;
     // a term shorter than its bucket width is its own prefix), so per-
     // (c, prefix) windows + offset join reproduce the global alphabetic rank
-    val boundaryTerms = graft.sql.GroupedNtile.rank(
-      counts.join(broadcast(boundary), "c"),
-      "c", Seq(col("term")), substring(col("term"), 1, 2), "rnk")
-      .where(col("cum_above") + (col("rnk") - 1) * col("c") < col("thresh"))
-      .select(col("term"), col("c"))
+    boundary.fold(fullTerms) { case (c, cumAbove, thresh) =>
+      fullTerms.unionByName(graft.sql.GroupedNtile.rank(
+        counts.where(col("c") === c), "c", Seq(col("term")), substring(col("term"), 1, 2), "rnk")
+        .where(lit(cumAbove) + (col("rnk") - 1) * col("c") < lit(thresh))
+        .select(col("term"), col("c")))
+    }
+  }
+}
 
-    fullTerms.unionByName(boundaryTerms)
+object VocabBuilder {
+  /** The cut over a (c, mass, n_terms) histogram: the counts admitted
+    * whole (their LAST term's exclusive mass is under the threshold), and
+    * the group the threshold falls inside, as (c, cum_above, thresh).
+    */
+  private[text] def cutoff(hist: Seq[(Long, Long, Long)], cover: Double)
+      : (Seq[Long], Option[(Long, Long, Double)]) = {
+    val groups = hist.sortBy(-_._1)
+    // exclusive mass above each group, in c-desc order; the last is the total
+    val above = groups.scanLeft(0L)((acc, g) => Math.addExact(acc, g._2))
+    val thresh = above.last.toDouble * cover
+    val cut = groups.zip(above).map { case ((c, _, n), cum) =>
+      (c, cum, Math.addExact(cum, Math.multiplyExact(n - 1, c)) < thresh) }
+    (cut.collect { case (c, _, true) => c },
+      cut.collectFirst { case (c, cum, false) if cum < thresh => (c, cum, thresh) })
   }
 }

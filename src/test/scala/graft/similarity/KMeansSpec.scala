@@ -1,8 +1,12 @@
 package graft.similarity
 
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
+import graft.sql.expressions.{MinSquaredL2, NearestCellL2}
 
 class KMeansSpec extends SparkTestBase {
   import spark.implicits._
@@ -89,5 +93,124 @@ class KMeansSpec extends SparkTestBase {
     assert(a.count() === 7)
     assert(a.select("vec_id").distinct().count() === 7)
     assert(a.agg(min("d2")).as[Double].head() >= 0.0)
+  }
+
+  /** The checkpoint-and-join shape the centroids had before they moved to
+    * the driver: triangle-join seed ranks, a `union` + `localCheckpoint`
+    * per farthest seed, and a left join + `localCheckpoint` per Lloyd
+    * round, with the centroid literals collected from each pinned frame.
+    */
+  private class Reference(k: Int, iters: Int, dim: Int) {
+    private def corpus(v: DataFrame) = graft.sql.functions.spread(
+      v.select(col("vec_id"), col("embedding").cast("array<double>").as("cv")), col("vec_id"))
+    private def cells(c: DataFrame) = {
+      val rows = c.select(col("cid").cast("long"), col("centroid")).collect()
+        .sortBy(r => (r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0)))
+      (Literal.create(rows.map(r => if (r.isNullAt(0)) null else Long.box(r.getLong(0))).toSeq,
+        ArrayType(LongType)),
+        Literal.create(rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Double](1)).toSeq,
+          ArrayType(ArrayType(DoubleType))))
+    }
+    private def refine(e: DataFrame, initial: DataFrame): DataFrame = {
+      var cents = initial.localCheckpoint()
+      require(!cents.isEmpty, "cannot fit k-means on an empty vector column")
+      for (_ <- 0 until iters) {
+        val (cidLit, centLit) = cells(cents)
+        val means = e.where(col("vec_id").isNotNull)
+          .withColumn("b", GraftBridge.column(
+            NearestCellL2(GraftBridge.expression(col("cv")), cidLit, centLit)))
+          .select(col("b.cid").as("cid"), col("cv"))
+          .groupBy(col("cid")).agg(graft.sql.functions.vectorMean(col("cv"), Some(dim)).as("m"))
+        cents = cents.as("c").join(means.as("n"), Seq("cid"), "left")
+          .select(col("cid"), coalesce(col("n.m"), col("c.centroid")).as("centroid"))
+          .localCheckpoint()
+      }
+      cents
+    }
+    def fit(v: DataFrame): DataFrame = refine(corpus(v),
+      Seeding.kLowestIdRanks(corpus(v), "vec_id", k, "cid")
+        .select(col("cid"), col("cv").as("centroid")))
+    def fitFarthest(v: DataFrame): DataFrame = {
+      val e = corpus(v)
+      var chosen = e.orderBy(col("vec_id")).limit(1)
+        .select(lit(0L).as("cid"), col("cv").as("centroid")).localCheckpoint()
+      for (i <- 1 until k) {
+        val next = e.withColumn("md", GraftBridge.column(
+            MinSquaredL2(GraftBridge.expression(col("cv")), cells(chosen)._2)))
+          .orderBy(col("md").desc, col("vec_id")).limit(1)
+          .select(lit(i.toLong).as("cid"), col("cv").as("centroid"))
+        chosen = chosen.unionByName(next).localCheckpoint()
+      }
+      refine(e, chosen)
+    }
+  }
+
+  /** Centroids as (cid, element bits) in cid-then-bits order, plus the schema. */
+  private def bits(c: DataFrame) = (c.schema, c.collect().toSeq.map { r =>
+    (r.getLong(0), Option(r.getSeq[java.lang.Double](1))
+      .map(_.map(x => Option(x).map(d => java.lang.Double.doubleToLongBits(d))).toList))
+  }.sortBy(_.toString))
+
+  private def sameAsReference(v: DataFrame, k: Int, iters: Int, dim: Int = 2): Unit = {
+    val (km, ref) = (new KMeans(k, iters, dim), new Reference(k, iters, dim))
+    assert(bits(km.fit(v)) === bits(ref.fit(v)), s"fit k=$k iters=$iters")
+    assert(bits(km.fitFarthest(v)) === bits(ref.fitFarthest(v)), s"fitFarthest k=$k iters=$iters")
+  }
+
+  private def vectors(rows: (java.lang.Long, Seq[java.lang.Double])*): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map { case (id, v) => Row(id, v) }: _*),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(DoubleType)))))
+
+  private def vec(xs: java.lang.Double*): Seq[java.lang.Double] = xs
+
+  test("fit and fitFarthest equal the checkpoint-and-join shape bit for bit") {
+    for (k <- 1 to 4; iters <- 0 to 3) sameAsReference(vecs, k, iters)
+  }
+
+  test("bit-equal to the checkpoint-and-join shape when a cluster loses every member") {
+    val dup = Seq((1L, Array(5.0, 5.0)), (2L, Array(5.0, 5.0)), (3L, Array(6.0, 5.0)))
+      .toDF("vec_id", "embedding")
+    for (iters <- 1 to 2) sameAsReference(dup, 2, iters)
+  }
+
+  test("bit-equal to the checkpoint-and-join shape with duplicate ids among the k lowest") {
+    // ids 1 and 3 repeat; the lowest id is unique so the farthest seed 0
+    // is determined, and k = 3 takes both id-1 rows (cids 0, 1, 1). No k
+    // splits a repeated id, which would leave the seed set arbitrary.
+    val v = vectors((0L, vec(1.0, 1.0)), (1L, vec(0.0, 0.0)), (1L, vec(0.5, 0.0)),
+      (2L, vec(9.0, 9.0)), (3L, vec(9.5, 9.0)), (3L, vec(0.2, 0.1)), (4L, vec(5.0, 5.0)))
+    val cids = new KMeans(3, 0, 2).seeds(v).select("cid").as[Long].collect().sorted
+    assert(cids.toSeq === Seq(0L, 1L, 1L))
+    for (k <- Seq(3, 4, 6); iters <- 0 to 2) sameAsReference(v, k, iters)
+  }
+
+  test("bit-equal to the checkpoint-and-join shape with null ids, null vectors and null elements") {
+    val v = vectors((null, vec(1.0, 1.0)), (1L, vec(0.0, 0.0)), (2L, null),
+      (3L, vec(null, 4.0)), (4L, vec(9.0, 9.0)), (5L, vec(8.0, 9.5)), (6L, vec(0.5, 0.5)))
+    for (k <- Seq(2, 3, 4); iters <- 0 to 2) sameAsReference(v, k, iters)
+  }
+
+  test("fit on an empty corpus fails with the checkpoint-and-join shape's message") {
+    val empty = vectors()
+    for (iters <- Seq(0, 2)) {
+      val ref = new Reference(2, iters, 2)
+      val km = new KMeans(k = 2, iters = iters, dim = 2)
+      val want = intercept[IllegalArgumentException](ref.fit(empty)).getMessage
+      assert(intercept[IllegalArgumentException](km.fit(empty)).getMessage === want)
+      assert(intercept[IllegalArgumentException](km.fitFarthest(empty)).getMessage === want)
+      assert(intercept[IllegalArgumentException](ref.fitFarthest(empty)).getMessage === want)
+    }
+  }
+
+  test("k * dim is bounded: the centroids are driver rows and plan literals") {
+    val e = intercept[IllegalArgumentException](new KMeans(k = 4096, iters = 1, dim = 65))
+    assert(e.getMessage.contains("k = 4096") && e.getMessage.contains("dim = 65") &&
+      e.getMessage.contains(KMeans.MaxCentroidValues.toString))
+    // the largest callers: 256-code PQ codebooks over 8-dim slices, and
+    // k = 16 at dim 64 (ScaleSmoke); the limit itself is admitted
+    new KMeans(k = 256, iters = 2, dim = 8)
+    new KMeans(k = 16, iters = 2, dim = 64)
+    new KMeans(k = 4096, iters = 1, dim = 64)
   }
 }

@@ -4,13 +4,16 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
 import graft.graph.{BfsDistance, Coreness, DensestSubgraph, KCore}
+import graft.similarity.KMeans
+import graft.text.VocabBuilder
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Job-count pins: [[Checkpoint]] costs the jobs of a bare
   * `localCheckpoint` and returns exact aggregates, and the convergence
-  * loops that use it stay within their documented jobs per round. The
+  * loops that use it stay within their documented jobs per round, as do
+  * the loops that keep their state on the driver (KMeans, VocabBuilder). The
   * per-round cost is the job difference between two inputs whose loop
   * depths differ by a known number of rounds, so set-up and the final
   * plan cancel out.
@@ -103,5 +106,28 @@ class CheckpointJobsSpec extends SparkTestBase {
     val pr = perRound(new DensestSubgraph().run(_),
       edges(Seq((1L, 2L), (2L, 3L), (1L, 3L))), edges(k8 ++ chain), 1)
     assert(pr <= 4.0)
+  }
+
+  test("KMeans: jobs per Lloyd round") {
+    val v = spark.range(0, 400, 1, 4).select(col("id").as("vec_id"),
+      array((col("id") % 7).cast("double"), (col("id") % 11).cast("double")).as("embedding"))
+    val fit = (iters: Int) => jobs(new KMeans(k = 3, iters = iters, dim = 2).fit(v))
+    val (one, three) = (fit(1), fit(3))
+    info(s"jobs: iters 1 -> $one, iters 3 -> $three")
+    // one collect: the spread shuffle, the means shuffle and the result
+    assert((three - one) / 2.0 === 3.0)
+  }
+
+  test("VocabBuilder: jobs of a whole vocabulary build and collect") {
+    // t0..t9 appear 30 times, u0..u19 15 times: cover 0.6 (threshold 360
+    // of 600) admits every t and cuts inside the count-15 group
+    val docs = spark.range(0, 300, 1, 4).select(concat_ws(" ",
+      concat(lit("t"), (col("id") % 10).cast("string")),
+      concat(lit("u"), (col("id") % 20).cast("string"))).as("text"))
+    val n = jobs(new VocabBuilder(0.6).vocab(docs).collect())
+    info(s"jobs: $n")
+    // the wordcount checkpoint, the histogram collect and the two term
+    // branches
+    assert(n === 9)
   }
 }
