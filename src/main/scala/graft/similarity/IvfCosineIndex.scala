@@ -1,9 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sql.expressions.NearestCell
 import graft.sql.functions.{cosineSimilarity, vectorMean}
 
 /** IVF (inverted-file) approximate cosine search: a coarse quantizer
@@ -21,7 +22,8 @@ import graft.sql.functions.{cosineSimilarity, vectorMean}
   * left unnormalized). Swap in full distributed k-means offline for
   * production-quality cells — the index/search plumbing is unchanged.
   *
-  * Scale: centroids are broadcast (numCentroids is small by design);
+  * Scale: centroids are plan literals (numCentroids is small by design,
+  * and their elements are bounded by [[NearestCell.MaxCentroidValues]]);
   * assignment is one streamed pass over the corpus; search touches only
   * `nprobe / numCentroids` of the data — the whole point of IVF at 100 TB.
   * The inverted lists shuffle on cluster id; skewed clusters are bounded by
@@ -46,62 +48,27 @@ class IvfCosineIndex(
     graft.sql.functions.spread(
       candidates.select(col(idCol), dvec(col(vecCol)).as("cv")), col(idCol))
 
-  /** The centroid set collected to the driver, sorted by cid (nulls
-    * last); centroids are driver-tiny by contract (numCentroids rows).
-    * Every assignment and probe reads its cells from such a snapshot as
-    * literals: [[graft.sql.expressions.NearestCentroidId]] replicates
-    * `max_by(cid, struct(cos, -cid))` bit-exactly, with no shuffle.
+  /** The centroid set collected to the driver; centroids are driver-tiny
+    * by contract (numCentroids rows, at most
+    * [[NearestCell.MaxCentroidValues]] elements in total). Every assignment
+    * and probe reads its cells from such a snapshot as literals:
+    * [[NearestCell]] replicates `max_by(cid, struct(cos, -cid))` (and the
+    * probe window) bit-exactly, with no shuffle.
     */
-  private def collectCells(cents: DataFrame) =
-    cents.select(col("cid").cast("long"),
-      dvec(col("centroid")).as("centroid")).collect()
-      .sortBy(r => (r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0)))
-
-  private def cellLiterals(rows: Array[org.apache.spark.sql.Row]) = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
-    (Literal.create(rows.map(r =>
-        if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))).toSeq,
-        ArrayType(LongType)),
-      Literal.create(rows.map(r =>
-        if (r.isNullAt(1)) null else r.getSeq[Double](1)).toSeq,
-        ArrayType(ArrayType(DoubleType))))
-  }
-
-  private def nearestCidCol(cents: DataFrame): Option[Column] = {
-    val rows = collectCells(cents)
-    if (rows.isEmpty) None
-    else {
-      val (cidLit, centLit) = cellLiterals(rows)
-      Some(org.apache.spark.sql.GraftBridge.column(
-        graft.sql.expressions.NearestCentroidId(
-          org.apache.spark.sql.GraftBridge.expression(col("cv")),
-          cidLit, centLit)))
-    }
-  }
-
-  /** Row-local top-nprobe probe-cell array for a query-vector column —
-    * replaces the crossJoin + per-query row_number window in [[probes]]
-    * (same ordering: cos DESC with NaN first / nulls last, ties by cid).
-    */
-  private def probeCidsCol(vecCol2: Column, cents: DataFrame): Column = {
-    val (cidLit, centLit) = cellLiterals(collectCells(cents))
-    org.apache.spark.sql.GraftBridge.column(
-      graft.sql.expressions.NearestCentroidIds(
-        org.apache.spark.sql.GraftBridge.expression(vecCol2),
-        cidLit, centLit, nprobe))
-  }
+  private def collectCells(cents: DataFrame): Array[Row] =
+    cents.select(col("cid").cast("long"), dvec(col("centroid"))).collect()
 
   /** The corpus frame with a row-local `cid` column; empty (same schema)
     * when the centroid set is empty. */
-  private def withNearest(e: DataFrame, cents: DataFrame): DataFrame =
-    nearestCidCol(cents) match {
-      case Some(c) => e.withColumn("cid", c)
-      case None => e.withColumn("cid", lit(null).cast("long")).where(lit(false))
-    }
+  private def withNearest(e: DataFrame, cents: DataFrame): DataFrame = {
+    val cells = collectCells(cents)
+    if (cells.isEmpty) e.withColumn("cid", lit(null).cast("long")).where(lit(false))
+    else e.withColumn("cid", NearestCell.column(NearestCell.CosineArgMax, col("cv"), cells))
+  }
 
   /** (id, cid): nearest centroid per vector (ties: lowest cid), computed
-    * row-locally — no argmax shuffle. PRECONDITION (shared by every
+    * row-locally by [[NearestCell]]'s cosine arg-max against the collected
+    * centroids — no argmax shuffle. PRECONDITION (shared by every
     * declared query): one row per non-null id; the old groupBy(id) shape
     * collapsed duplicate ids to one arbitrary-winner row where this
     * assigns each row independently.
@@ -249,8 +216,8 @@ class IvfCosineIndex(
     // with a per-query row_number window — a query-keyed exchange + sort
     // per search — when the whole selection is computable in place
     // against centroid literals with the identical ordering
-    qv.withColumn("cid",
-        explode(probeCidsCol(col("qv"), index.centroids)))
+    qv.withColumn("cid", explode(NearestCell.column(NearestCell.CosineTopN(nprobe),
+        col("qv"), collectCells(index.centroids))))
       .select(col("query_id"), col("qv"), col("cid"))
   }
 

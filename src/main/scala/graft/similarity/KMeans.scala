@@ -1,9 +1,9 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
+import graft.sql.expressions.NearestCell
 import graft.sql.functions.vectorMean
 
 /** Fixed-iteration distributed k-means (Lloyd's algorithm) under squared
@@ -26,9 +26,10 @@ import graft.sql.functions.vectorMean
   * without it the next assignment would silently drop a cid).
   *
   * Scale, per iteration: centroids are k driver rows, passed to the round
-  * as array literals (hence `k * dim` ≤ [[KMeans.MaxCentroidValues]]);
-  * assignment is a row-local argmin in ONE streamed pass over the corpus,
-  * and the new means are one partial-aggregated groupBy(cid) of one
+  * as array literals (hence `k * dim` ≤ [[NearestCell.MaxCentroidValues]]);
+  * assignment is a row-local argmin ([[NearestCell]] under squared L2) in
+  * ONE streamed pass over the corpus, and the new means are one
+  * partial-aggregated groupBy(cid) of one
   * [[graft.sql.functions.vectorMean]] (two buffer fields at any `dim`),
   * collected: one collect per round, no checkpoint, no join. The corpus is
   * scanned `iters + 1` times (the inherent Lloyd cost) and shuffles only
@@ -46,8 +47,8 @@ class KMeans(
   require(k > 0, "k must be positive")
   require(iters >= 0, "iters must be non-negative")
   require(dim > 0, "dim must be positive")
-  require(k.toLong * dim <= KMeans.MaxCentroidValues,
-    s"k * dim (k = $k, dim = $dim) exceeds ${KMeans.MaxCentroidValues}: " +
+  require(k.toLong * dim <= NearestCell.MaxCentroidValues,
+    s"k * dim (k = $k, dim = $dim) exceeds ${NearestCell.MaxCentroidValues}: " +
       "centroids are driver rows and a literal in every round's plan")
 
   private def projected(vectors: DataFrame): DataFrame =
@@ -78,11 +79,9 @@ class KMeans(
     val e = corpus(vectors)
     var chosen = top1(projected(vectors).orderBy(col(idCol)), 0L)
     for (i <- 1 until k if chosen.nonEmpty)
-      // MinSquaredL2 replicates SQL min (nulls ignored, NaN largest)
-      chosen ++= top1(e.withColumn("md", org.apache.spark.sql.GraftBridge.column(
-          graft.sql.expressions.MinSquaredL2(
-            org.apache.spark.sql.GraftBridge.expression(col("cv")), literals(chosen)._2)))
-        .orderBy(col("md").desc, col(idCol)), i.toLong)
+      // SQL min over the chosen seeds: nulls ignored, NaN largest
+      chosen ++= top1(e.withColumn("md", NearestCell.column(NearestCell.L2MinDistance,
+          col("cv"), chosen)).orderBy(col("md").desc, col(idCol)), i.toLong)
     chosen
   }
 
@@ -110,29 +109,13 @@ class KMeans(
     top.zip(ranks).map { case (r, rank) => Row(rank, r.get(1)) }
   }
 
-  /** A (cid, centroid) row set as cid-ordered (cids, centroids) array
-    * literals for the row-local assignment expressions.
-    */
-  private def literals(cells: Array[Row]): (Literal, Literal) = {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
-    val rows = cells.sortBy(r => (r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0)))
-    (Literal.create(rows.map(r => if (r.isNullAt(0)) null else Long.box(r.getLong(0))).toSeq,
-        ArrayType(LongType)),
-      Literal.create(rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Double](1)).toSeq,
-        ArrayType(ArrayType(DoubleType))))
-  }
-
   /** `cvFrame` plus `b`: the nearest cell's (cid, d2) under squared L2. */
-  private def nearest(cvFrame: DataFrame, cells: Array[Row]): DataFrame = {
-    val (cidLit, centLit) = literals(cells)
-    cvFrame.withColumn("b", org.apache.spark.sql.GraftBridge.column(
-      graft.sql.expressions.NearestCellL2(
-        org.apache.spark.sql.GraftBridge.expression(col("cv")), cidLit, centLit)))
-  }
+  private def nearest(cvFrame: DataFrame, cells: Array[Row]): DataFrame =
+    cvFrame.withColumn("b", NearestCell.column(NearestCell.L2ArgMin, col("cv"), cells))
 
   /** (id, cid, d2): nearest centroid per vector under squared L2; ties to
     * the lowest cid — computed row-locally against the collected centroids
-    * ([[graft.sql.expressions.NearestCellL2]] replicates the old
+    * ([[NearestCell]]'s `L2ArgMin` replicates the old
     * `min_by(struct(cid, d2), struct(d2, cid))` bit-exactly). PRECONDITION
     * (every declared query satisfies it): one row per non-null id — the
     * old groupBy(id) collapsed duplicate ids to one arbitrary-winner row.
@@ -206,12 +189,6 @@ class KMeans(
   * (ArtifactPersistenceSpec pins this).
   */
 object KMeans {
-
-  /** Bound on `k * dim`, 2^18 doubles (2 MiB): centroids are driver rows
-    * and a literal in every round's plan. The largest caller, 256-code PQ
-    * codebooks over 8-dim slices, needs 2,048.
-    */
-  val MaxCentroidValues: Long = 1L << 18
 
   def saveCentroids(centroids: DataFrame, path: String): Unit =
     centroids.select(col("cid"), col("centroid"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * This is the hot kernel of every similarity operator
   * ([[graft.similarity.CosineTopK]], [[graft.similarity.RandomHyperplaneLSH]]
-  * verification, [[graft.similarity.IvfCosineIndex]] assignment/probing) —
+  * verification, [[graft.similarity.IvfCosineIndex]] search) —
   * dim multiply-adds per evaluated pair. The higher-order-function
   * formulation (zip_with + aggregate ×3) runs on the interpreted
   * CodegenFallback path AND walks each array three times; here one fused
@@ -22,6 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Semantics kept from the HOF version: NULL if either array is NULL or
   * lengths differ; array elements must be non-null (enforced upstream by
   * `cast(... as array<double>)` over non-null embeddings).
+  *
+  * The interpreted loop is [[CosineSimilarity.of]] on the companion: the
+  * loop the [[NearestCell]] kernel calls for IVF assignment and probes.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -41,24 +44,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val va = a.asInstanceOf[ArrayData]
     val vb = b.asInstanceOf[ArrayData]
-    val n = va.numElements()
-    if (n != vb.numElements()) {
-      null
-    } else {
-      var dot = 0.0
-      var na = 0.0
-      var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val x = va.getDouble(i)
-        val y = vb.getDouble(i)
-        dot += x * y
-        na += x * x
-        nb += y * y
-        i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
+    if (va.numElements() != vb.numElements()) null else CosineSimilarity.of(va, vb)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -93,4 +79,28 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** Cosine of two same-length vectors: the interpreted loop, shared by
+    * [[CosineSimilarity.nullSafeEval]] and the [[NearestCell]] kernel, so
+    * both add the same terms in the same order.
+    */
+  def of(va: ArrayData, vb: ArrayData): Double = {
+    val n = va.numElements()
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = va.getDouble(i)
+      val y = vb.getDouble(i)
+      dot += x * y
+      na += x * x
+      nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }

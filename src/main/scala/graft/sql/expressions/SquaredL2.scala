@@ -18,6 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Semantics: NULL if either array is NULL or lengths differ; elements
   * must be non-null (enforced upstream by `cast(... as array<double>)`).
+  *
+  * The interpreted loop is [[SquaredL2.of]] on the companion: the loop the
+  * [[NearestCell]] kernel calls for k-means assignment and seeding.
   */
 case class SquaredL2(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -37,19 +40,7 @@ case class SquaredL2(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val va = a.asInstanceOf[ArrayData]
     val vb = b.asInstanceOf[ArrayData]
-    val n = va.numElements()
-    if (n != vb.numElements()) {
-      null
-    } else {
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val d = va.getDouble(i) - vb.getDouble(i)
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
+    if (va.numElements() != vb.numElements()) null else SquaredL2.of(va, vb)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -76,4 +67,23 @@ case class SquaredL2(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SquaredL2 =
     copy(left = newLeft, right = newRight)
+}
+
+object SquaredL2 {
+
+  /** Squared L2 distance of two same-length vectors: the interpreted loop,
+    * shared by [[SquaredL2.nullSafeEval]] and the [[NearestCell]] kernel,
+    * so both add the same terms in the same order.
+    */
+  def of(va: ArrayData, vb: ArrayData): Double = {
+    val n = va.numElements()
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val d = va.getDouble(i) - vb.getDouble(i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** The r17 row-local nearest-centroid assignment
-  * ([[graft.sql.expressions.NearestCentroidId]]) must be drop-in equal to
+/** The r17 row-local nearest-centroid assignment (the cosine arg-max of
+  * [[graft.sql.expressions.NearestCell]]) must be drop-in equal to
   * the crossJoin + `max_by(cid, struct(cos, -cid))` shape it replaced —
   * including the edges: a zero vector (cos = NaN against every centroid,
   * NaN sorts LARGEST so the zero vector assigns to the lowest cid), and
@@ -96,20 +96,27 @@ class IvfAssignParitySpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
     import org.apache.spark.sql.types._
-    import graft.sql.expressions.NearestCentroidId
+    import graft.sql.expressions.NearestCell
     val cents = Literal.create(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)),
       ArrayType(ArrayType(DoubleType)))
     val cids = Literal.create(Seq(7L, null), ArrayType(LongType))
-    def assign(v: Seq[Double]) =
-      NearestCentroidId(Literal.create(v, ArrayType(DoubleType)), cids, cents)
-    def generated(v: Seq[Double]): Any = {
-      val row = GenerateUnsafeProjection.generate(Seq(assign(v)))(InternalRow.empty)
-      if (row.isNullAt(0)) null else row.getLong(0)
+    // cosine returns the cid; squared L2 returns struct(cid, d2)
+    for ((shape, cid) <- Seq[(NearestCell.Shape, InternalRow => Any)](
+        NearestCell.CosineArgMax -> (r => if (r.isNullAt(0)) null else r.getLong(0)),
+        NearestCell.L2ArgMin -> { r =>
+          val b = r.getStruct(0, 2)
+          if (b.isNullAt(0)) null else b.getLong(0)
+        })) {
+      def assign(v: Seq[Double]) =
+        NearestCell(Literal.create(v, ArrayType(DoubleType)), cids, cents, shape)
+      def interpreted(v: Seq[Double]): Any = cid(InternalRow(assign(v).eval()))
+      def generated(v: Seq[Double]): Any =
+        cid(GenerateUnsafeProjection.generate(Seq(assign(v)))(InternalRow.empty))
+      // the second cell wins and its cid is null; the first wins with cid 7
+      assert(interpreted(Seq(0.0, 1.0)) === null, shape)
+      assert(generated(Seq(0.0, 1.0)) === null, shape)
+      assert(interpreted(Seq(1.0, 0.0)) === 7L, shape)
+      assert(generated(Seq(1.0, 0.0)) === 7L, shape)
     }
-    // the second cell wins and its cid is null; the first wins with cid 7
-    assert(assign(Seq(0.0, 1.0)).eval() === null)
-    assert(generated(Seq(0.0, 1.0)) === null)
-    assert(assign(Seq(1.0, 0.0)).eval() === 7L)
-    assert(generated(Seq(1.0, 0.0)) === 7L)
   }
 }

@@ -1,12 +1,12 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
-import graft.sql.expressions.{MinSquaredL2, NearestCellL2}
+import graft.sql.expressions.NearestCell
+import graft.sql.functions.squaredL2
 
 class KMeansSpec extends SparkTestBase {
   import spark.implicits._
@@ -98,29 +98,33 @@ class KMeansSpec extends SparkTestBase {
   /** The checkpoint-and-join shape the centroids had before they moved to
     * the driver: triangle-join seed ranks, a `union` + `localCheckpoint`
     * per farthest seed, and a left join + `localCheckpoint` per Lloyd
-    * round, with the centroid literals collected from each pinned frame.
+    * round. Assignment and farthest distance are the crossJoin SQL the
+    * row-local kernel replaced: `squared_l2` against the broadcast
+    * centroids, then `min_by(struct(cid, d2), struct(d2, cid))` or
+    * `min(d2)` per vector. Vectors are grouped by (id, cv), not by id
+    * alone, because the kernel assigns each row; the assignment joins
+    * back onto the streamed corpus, so the means add the same rows in
+    * the same order.
     */
   private class Reference(k: Int, iters: Int, dim: Int) {
     private def corpus(v: DataFrame) = graft.sql.functions.spread(
       v.select(col("vec_id"), col("embedding").cast("array<double>").as("cv")), col("vec_id"))
-    private def cells(c: DataFrame) = {
-      val rows = c.select(col("cid").cast("long"), col("centroid")).collect()
-        .sortBy(r => (r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0)))
-      (Literal.create(rows.map(r => if (r.isNullAt(0)) null else Long.box(r.getLong(0))).toSeq,
-        ArrayType(LongType)),
-        Literal.create(rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Double](1)).toSeq,
-          ArrayType(ArrayType(DoubleType))))
-    }
+    private def distances(e: DataFrame, cents: DataFrame) =
+      e.crossJoin(broadcast(cents))
+        .select(col("vec_id"), col("cv"), col("cid"), squaredL2(col("cv"), col("centroid")).as("d2"))
+        .groupBy(col("vec_id"), col("cv"))
     private def refine(e: DataFrame, initial: DataFrame): DataFrame = {
       var cents = initial.localCheckpoint()
       require(!cents.isEmpty, "cannot fit k-means on an empty vector column")
       for (_ <- 0 until iters) {
-        val (cidLit, centLit) = cells(cents)
-        val means = e.where(col("vec_id").isNotNull)
-          .withColumn("b", GraftBridge.column(
-            NearestCellL2(GraftBridge.expression(col("cv")), cidLit, centLit)))
-          .select(col("b.cid").as("cid"), col("cv"))
-          .groupBy(col("cid")).agg(graft.sql.functions.vectorMean(col("cv"), Some(dim)).as("m"))
+        val members = e.where(col("vec_id").isNotNull)
+        val nearest = distances(members, cents)
+          .agg(min_by(struct(col("cid"), col("d2")), struct(col("d2"), col("cid"))).as("b"))
+        val means = members.as("e")
+          .join(broadcast(nearest).as("a"),
+            col("e.vec_id") === col("a.vec_id") && (col("e.cv") <=> col("a.cv")))
+          .groupBy(col("a.b.cid").as("cid"))
+          .agg(graft.sql.functions.vectorMean(col("e.cv"), Some(dim)).as("m"))
         cents = cents.as("c").join(means.as("n"), Seq("cid"), "left")
           .select(col("cid"), coalesce(col("n.m"), col("c.centroid")).as("centroid"))
           .localCheckpoint()
@@ -135,8 +139,7 @@ class KMeansSpec extends SparkTestBase {
       var chosen = e.orderBy(col("vec_id")).limit(1)
         .select(lit(0L).as("cid"), col("cv").as("centroid")).localCheckpoint()
       for (i <- 1 until k) {
-        val next = e.withColumn("md", GraftBridge.column(
-            MinSquaredL2(GraftBridge.expression(col("cv")), cells(chosen)._2)))
+        val next = distances(e, chosen).agg(min(col("d2")).as("md"))
           .orderBy(col("md").desc, col("vec_id")).limit(1)
           .select(lit(i.toLong).as("cid"), col("cv").as("centroid"))
         chosen = chosen.unionByName(next).localCheckpoint()
@@ -206,7 +209,7 @@ class KMeansSpec extends SparkTestBase {
   test("k * dim is bounded: the centroids are driver rows and plan literals") {
     val e = intercept[IllegalArgumentException](new KMeans(k = 4096, iters = 1, dim = 65))
     assert(e.getMessage.contains("k = 4096") && e.getMessage.contains("dim = 65") &&
-      e.getMessage.contains(KMeans.MaxCentroidValues.toString))
+      e.getMessage.contains(NearestCell.MaxCentroidValues.toString))
     // the largest callers: 256-code PQ codebooks over 8-dim slices, and
     // k = 16 at dim 64 (ScaleSmoke); the limit itself is admitted
     new KMeans(k = 256, iters = 2, dim = 8)
