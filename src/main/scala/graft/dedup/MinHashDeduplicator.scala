@@ -28,17 +28,18 @@ import org.apache.spark.sql.types._
   *     oracle — no JVM-private hash function. Partial aggregation makes
   *     the shuffle carry only (doc, seed) minima, not doc×shingle rows.
   *  3. '''bands''': the numHashes signatures are chunked into numBands
-  *     groups; each band's signature is md5 of its seed-ordered minhashes.
-  *  4. '''candidates''': equi-join docs on (band, signature) — bucketed;
+  *     groups; each band's key is its seed-ordered slice of minhashes.
+  *  4. '''candidates''': equi-join docs on (band, key) — bucketed;
   *     two docs compare only if at least one band collides.
   *  5. '''verify''': exact shingle-set Jaccard on the candidates only;
   *     pairs ≥ threshold survive.
   *
-  * Scale: the band join shuffles on (band, bandSig) — uniformly distributed
-  * 128-bit keys; bucket sizes are the LSH collision groups (tunable via
-  * numBands/rowsPerBand), so the quadratic blowup is confined to genuinely
-  * similar clusters. Verification joins shingles only for candidate ids
-  * (semi-join pushdown of the candidate set).
+  * Scale: each document is shingled and signed once, and its (mh, shset)
+  * row pinned before the band join ([[graft.sql.PairJoins.bandedSelfPairs]]);
+  * the join keys on (band, slice) — uniformly distributed minima; bucket
+  * sizes are the LSH collision groups (tunable via numBands/rowsPerBand),
+  * so the quadratic blowup is confined to genuinely similar clusters.
+  * Verification reads the shingle sets carried through the join.
   */
 class MinHashDeduplicator(override val uid: String) extends Transformer
     with DefaultParamsWritable {
@@ -109,18 +110,23 @@ class MinHashDeduplicator(override val uid: String) extends Transformer
           org.apache.spark.sql.GraftBridge.expression(unit), k)).as("sh"))
   }
 
+  /** (id, shset, mh): one row per document, its shingle array derived
+    * once into the verify's distinct shingle set (sortedDistinct: the same
+    * element set as array_distinct, sorted once per document, so the
+    * per-pair verify merge-counts) and its seed-ordered signature array.
+    */
+  private def signed(dataset: Dataset[_]): DataFrame =
+    shingleArray(dataset).select(id,
+      graft.sql.functions.sortedDistinct(col("sh")).as("shset"),
+      MinHashDeduplicator.signature(col("sh"), $(numHashes)).as("mh"))
+
   /** MinHash signatures: (id, seed, minhash) — one row per doc per seed.
     * All numHashes minima come from ONE row-local pass over the shingle
     * array ([[graft.sql.expressions.MinHashSignature]]): no shingle×seed
     * explode, no aggregation shuffle.
     */
   def signatures(dataset: Dataset[_]): DataFrame =
-    shingleArray(dataset)
-      .select(id,
-        org.apache.spark.sql.GraftBridge.column(
-          graft.sql.expressions.MinHashSignature(
-            org.apache.spark.sql.GraftBridge.expression(col("sh")), $(numHashes)))
-          .as("mh"))
+    signed(dataset)
       // OUTER explode on purpose: InferFiltersFromGenerate would otherwise
       // duplicate the whole signature expression into a per-row
       // size(...) > 0 scan filter (measured 50× slowdown); the signature
@@ -128,78 +134,36 @@ class MinHashDeduplicator(override val uid: String) extends Transformer
       .select(id, posexplode_outer(col("mh")))
       .select(id, col("pos").cast("int").as("seed"), col("col").as("minhash"))
 
-  /** LSH band signatures: (id, band, bandSig). ROW-LOCAL: the signature
-    * array is already seed-ordered, so each band's signature is the md5 of
-    * a slice — no per-(id, band) aggregation shuffle at all (the previous
-    * formulation re-grouped the exploded (id, seed) rows). Produces the
-    * identical comma-joined digest the SQL oracle computes with
-    * `string_agg(... ORDER BY seed)`.
+  /** (id_a, id_b[, <p>_a, <p>_b]) sharing a band key, each document's
+    * (mh, payload) row pinned once before the band join.
     */
-  def bandSignatures(dataset: Dataset[_]): DataFrame = {
-    val rowsPerBand = $(numHashes) / $(numBands)
-    require(rowsPerBand * $(numBands) == $(numHashes),
-      s"numBands (${$(numBands)}) must divide numHashes (${$(numHashes)})")
-    shingleArray(dataset)
-      .select(id,
-        org.apache.spark.sql.GraftBridge.column(
-          graft.sql.expressions.MinHashSignature(
-            org.apache.spark.sql.GraftBridge.expression(col("sh")), $(numHashes)))
-          .as("mh"))
-      .select(id, explode_outer(expr(
-        s"""transform(sequence(0, ${$(numBands) - 1}),
-           |  b -> struct(CAST(b AS INT) AS band,
-           |    md5(array_join(transform(slice(mh, b * $rowsPerBand + 1, $rowsPerBand),
-           |      x -> CAST(x AS STRING)), ',')) AS bandSig))""".stripMargin)).as("bs"))
-      .select(id, col("bs.band").as("band"), col("bs.bandSig").as("bandSig"))
-  }
+  private def bandPairs(dataset: Dataset[_], payload: Seq[String]): DataFrame =
+    graft.sql.PairJoins.bandedSelfPairs(
+      signed(dataset).select(id +: col("mh") +: payload.map(col): _*), $(idCol),
+      MinHashDeduplicator.bandKeys(col("mh"), $(numHashes), $(numBands)), payload)
 
-  /** Candidate pairs (idA < idB) sharing at least one band signature. */
+  /** Candidate pairs (idA < idB) sharing at least one band key. Runs the
+    * pin's jobs when called.
+    */
   def candidatePairs(dataset: Dataset[_]): DataFrame =
-    graft.sql.PairJoins.bucketedSelfPairs(
-      bandSignatures(dataset), $(idCol), Seq("band", "bandSig"))
-      .distinct()
+    bandPairs(dataset, payload = Nil).distinct()
 
   /** Verified near-duplicate pairs: (id_a, id_b, jaccard ≥ threshold).
     * Verification is row-local set math over the candidates' DISTINCT
     * shingle-set arrays (sortedDistinct, matching the oracle's DISTINCT
     * semantics exactly) — no distinct-shingle shuffle, no per-shingle
     * intersection join; only the ~candidate-count rows do real work.
+    * Runs the pin's jobs when called.
     */
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
-    // r16 restructure (the q183 carry-through pattern, batch form): the
-    // shingle SET rides through the band join as payload instead of being
-    // re-derived by two verify-side joins — the old shape instantiated
-    // the normalize+shingle kernel once per verify side (the sets frame
-    // cannot be exchange-shared: its consumers join on different keys).
-    // One frame computes sh once, derives (shset, mh) side by side, and
-    // the keyed band self-join (PairJoins) dedupes ITS two sides via
-    // ReuseExchange. Dedup runs BEFORE the verify (one arbitrary
-    // collision row per pair survives; shset is identical on every
-    // collision of the same pair), and the jaccard filter cannot be
+    // The shingle set rides through the band join as payload, so nothing
+    // joins back to the corpus. Dedup runs BEFORE the verify (one
+    // arbitrary collision row per pair survives; shset is identical on
+    // every collision of the same pair), and the jaccard filter cannot be
     // pushed below the dedup's first()-aggregate barrier, so the
     // intersect is computed exactly once per candidate pair.
-    val rowsPerBand = $(numHashes) / $(numBands)
-    require(rowsPerBand * $(numBands) == $(numHashes),
-      s"numBands (${$(numBands)}) must divide numHashes (${$(numHashes)})")
-    // r17: shset is sortedDistinct (same element set as array_distinct,
-    // sorted once per document) so the per-pair verify merge-counts
-    // instead of building an array_intersect hash set per pair.
-    val bands = shingleArray(dataset)
-      .select(id, graft.sql.functions.sortedDistinct(col("sh")).as("shset"),
-        org.apache.spark.sql.GraftBridge.column(
-          graft.sql.expressions.MinHashSignature(
-            org.apache.spark.sql.GraftBridge.expression(col("sh")), $(numHashes)))
-          .as("mh"))
-      .select(id, col("shset"), explode_outer(expr(
-        s"""transform(sequence(0, ${$(numBands) - 1}),
-           |  b -> struct(CAST(b AS INT) AS band,
-           |    md5(array_join(transform(slice(mh, b * $rowsPerBand + 1, $rowsPerBand),
-           |      x -> CAST(x AS STRING)), ',')) AS bandSig))""".stripMargin)).as("bs"))
-      .select(id, col("bs.band").as("band"), col("bs.bandSig").as("bandSig"),
-        col("shset"))
-    graft.sql.PairJoins.bucketedSelfPairs(
-      bands, $(idCol), Seq("band", "bandSig"), payload = Seq("shset"))
+    bandPairs(dataset, payload = Seq("shset"))
       .dropDuplicates("id_a", "id_b")
       .withColumn("inter",
         graft.sql.functions.sortedIntersectCount(col("shset_a"), col("shset_b")))
@@ -222,4 +186,26 @@ class MinHashDeduplicator(override val uid: String) extends Transformer
   override def copy(extra: ParamMap): MinHashDeduplicator = defaultCopy(extra)
 }
 
-object MinHashDeduplicator extends DefaultParamsReadable[MinHashDeduplicator]
+object MinHashDeduplicator extends DefaultParamsReadable[MinHashDeduplicator] {
+
+  /** The `numHashes` seed-ordered minima of a shingle array
+    * ([[graft.sql.expressions.MinHashSignature]]).
+    */
+  def signature(shingles: Column, numHashes: Int): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      graft.sql.expressions.MinHashSignature(
+        org.apache.spark.sql.GraftBridge.expression(shingles), numHashes))
+
+  /** The `numBands` band keys of a signature array `mh`, as
+    * `array<struct<band, key>>`: band b's key is its seed-ordered slice
+    * `slice(mh, b*r + 1, r)` of r = numHashes / numBands minima, compared
+    * as an array. Two documents collide in a band exactly when their
+    * slices are equal, so no digest of the slice is needed.
+    */
+  def bandKeys(mh: Column, numHashes: Int, numBands: Int): Column = {
+    val rowsPerBand = numHashes / numBands
+    require(rowsPerBand * numBands == numHashes,
+      s"numBands ($numBands) must divide numHashes ($numHashes)")
+    graft.sql.PairJoins.bandKeys(numBands)(b => slice(mh, b * rowsPerBand + 1, rowsPerBand))
+  }
+}

@@ -21,16 +21,14 @@ import org.apache.spark.sql.types._
   * Scale: `transform` is one `spread` shuffle (by id, only for inputs with
   * fewer files than cores) feeding the row-local [[graft.sql.expressions.SimHash64]]
   * kernel. The pair search parses each signature to its 64-bit value and
-  * pins the (id, long) rows once per document, explodes four 16-bit long
-  * slices of it as band keys, and broadcast-joins the band rows on them;
+  * hands the (id, long) rows to [[graft.sql.PairJoins.bandedSelfPairs]],
+  * which pins them once per document, explodes four 16-bit slices of
+  * each as band keys, and broadcast-joins the band rows on them;
   * each band collision then costs one xor + popcount (305,608 collisions
   * for 1,364 pairs at sf0.1). The pin keeps the kernel at one evaluation
-  * per document: without it, the band join's inferred `isnotnull(chunk)`
-  * is pushed through Generate, Project and the spread repartition into
-  * the scan, which signs every document on a single task, and each join
-  * side signs it again (q36 at sf0.1: ~2.5 core-s of tasks unpinned,
-  * ~1.3 pinned). The pinned frame reports no id partitioning, so the
-  * final `distinct` adds a hash exchange.
+  * per document (q36 at sf0.1: ~2.5 core-s of tasks unpinned, ~1.3
+  * pinned). The pinned frame reports no id partitioning, so the final
+  * `distinct` adds a hash exchange.
   */
 class SimHasher(override val uid: String) extends Transformer
     with DefaultParamsWritable {
@@ -77,19 +75,17 @@ class SimHasher(override val uid: String) extends Transformer
   /** Hamming distance between two 16-hex-char signatures (0..64). */
   def hammingDistance(a: Column, b: Column): Column = popXor(sigBits(a), sigBits(b))
 
-  /** (id, band, chunk, sig): the signature parsed once per document to its
-    * long `sig` and pinned by an eager `localCheckpoint` (see Scale in the
-    * class doc), then exploded into four bands whose `chunk` is the 16-bit
-    * slice holding hex chars `4*band+1 .. 4*band+4`. `sig` rides along so
-    * pair consumers need no join back.
+  /** (id_a, id_b[, sig_a, sig_b]): the pairs sharing a band. Each
+    * signature is parsed once per document to its long `sig` and pinned
+    * (see Scale in the class doc); band `b`'s key is the 16-bit slice
+    * holding hex chars `4*b+1 .. 4*b+4`.
     */
-  private def bands(signed: DataFrame): DataFrame =
-    signed.select(col($(idCol)), sigBits(col($(outputCol))).as("sig"))
-      .localCheckpoint()
-      .select(col($(idCol)), col("sig"), explode(expr("sequence(0, 3)")).as("band"))
-      .select(col($(idCol)), col("band"),
-        expr("shiftrightunsigned(sig, 48 - 16 * band) & 65535").as("chunk"),
-        col("sig"))
+  private def bandPairs(signed: DataFrame, payload: Seq[String]): DataFrame =
+    graft.sql.PairJoins.bandedSelfPairs(
+      signed.select(col($(idCol)), sigBits(col($(outputCol))).as("sig")), $(idCol),
+      graft.sql.PairJoins.bandKeys(4)(b =>
+        shiftrightunsigned(col("sig"), 48 - 16 * b).bitwiseAND(65535L)),
+      payload)
 
   /** Near-duplicate pairs with exact Hamming distance ≤ maxDist, candidates
     * from band buckets only (complete for maxDist ≤ 3 by pigeonhole).
@@ -102,8 +98,7 @@ class SimHasher(override val uid: String) extends Transformer
     */
   def nearDupPairs(signed: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist <= 3, s"banding only guarantees completeness for maxDist <= 3, got $maxDist")
-    graft.sql.PairJoins.bucketedSelfPairs(
-      bands(signed), $(idCol), Seq("band", "chunk"), payload = Seq("sig"))
+    bandPairs(signed, payload = Seq("sig"))
       .select(col("id_a"), col("id_b"),
         popXor(col("sig_a"), col("sig_b")).as("hamming"))
       .where(col("hamming") <= maxDist)
@@ -115,9 +110,7 @@ class SimHasher(override val uid: String) extends Transformer
     * Runs the same 2 pinning jobs when called as [[nearDupPairs]].
     */
   def candidatePairs(signed: DataFrame): DataFrame =
-    graft.sql.PairJoins.bucketedSelfPairs(
-      bands(signed), $(idCol), Seq("band", "chunk"))
-      .distinct()
+    bandPairs(signed, payload = Nil).distinct()
 
   override def transformSchema(schema: StructType): StructType = {
     require(schema.fieldNames.contains($(idCol)), s"id column ${$(idCol)} not found")

@@ -25,9 +25,11 @@ import graft.sql.functions.cosineSimilarity
   * Recall (P[some band agrees] for angle θ, b bands × r rows):
   * `1 - (1 - (1-θ/π)^r)^b` — e.g. cosine 0.99 with 4×8: ≈0.99.
   *
-  * Scale: signatures are one narrow projection; the candidate join shuffles
-  * on (band, bandSig) — bounded bucket sizes set by numPlanes/numBands;
-  * verification computes exact cosine for candidates only.
+  * Scale: signatures are one narrow projection, pinned once per vector
+  * before a self-join ([[graft.sql.PairJoins.bandedSelfPairs]]); the
+  * candidate join keys on (band, bandSig) — bounded bucket sizes set by
+  * numPlanes/numBands; verification computes exact cosine for candidates
+  * only.
   */
 class RandomHyperplaneLSH(
     numPlanes: Int,
@@ -52,35 +54,44 @@ class RandomHyperplaneLSH(
         org.apache.spark.sql.GraftBridge.expression(dvec(col(vecCol))),
         numPlanes))
 
-  /** (id, band, bandSig): one row per vector per band. The input is spread
-    * to full parallelism first — the signature kernel is CPU-bound and a
+  /** (id, sig, vec): one row per vector. The input is spread to full
+    * parallelism first — the signature kernel is CPU-bound and a
     * single-split input would serialize it.
     */
-  def bandSignatures(vectors: DataFrame): DataFrame =
+  private def signed(vectors: DataFrame): DataFrame =
     graft.sql.functions.spread(vectors, col(idCol))
-      .select(col(idCol), signatureExpr.as("sig"))
-      .select(col(idCol), explode(expr(s"sequence(0, ${numBands - 1})")).as("band"), col("sig"))
-      .select(col(idCol), col("band"),
-        expr(s"substring(sig, band * $rowsPerBand + 1, $rowsPerBand)").as("bandSig"))
+      .select(col(idCol), signatureExpr.as("sig"), dvec(col(vecCol)).as("vec"))
 
-  /** Distinct candidate pairs (id_a < id_b) sharing at least one band. */
+  /** Band b's key: its `rowsPerBand` sign bits of `sig`. */
+  private def bandKeys: Column =
+    graft.sql.PairJoins.bandKeys(numBands)(b =>
+      substring(col("sig"), b * rowsPerBand + 1, rowsPerBand))
+
+  /** (id, band, bandSig): one row per vector per band. */
+  def bandSignatures(vectors: DataFrame): DataFrame =
+    signed(vectors).select(col(idCol), explode(bandKeys).as("bk"))
+      .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("bandSig"))
+
+  /** Distinct candidate pairs (id_a < id_b) sharing at least one band.
+    * Runs the jobs that pin each signature once when called.
+    */
   def candidatePairs(vectors: DataFrame): DataFrame =
-    graft.sql.PairJoins.bucketedSelfPairs(
-      bandSignatures(vectors), idCol, Seq("band", "bandSig"))
-      .distinct()
+    graft.sql.PairJoins.bandedSelfPairs(
+      signed(vectors).select(col(idCol), col("sig")), idCol, bandKeys).distinct()
 
   /** Near-duplicate pairs with exact cosine ≥ threshold, candidates from
-    * band buckets only.
+    * band buckets only. Each vector is signed once and carried through the
+    * band join as payload, so nothing joins back to the corpus; the pair
+    * dedup runs before the cosine, once per candidate pair. Runs the jobs
+    * that pin the (id, sig, vec) rows when called.
     */
-  def nearDupPairs(vectors: DataFrame, threshold: Double): DataFrame = {
-    val va = vectors.select(col(idCol).as("id_a"), dvec(col(vecCol)).as("va"))
-    val vb = vectors.select(col(idCol).as("id_b"), dvec(col(vecCol)).as("vb"))
-    candidatePairs(vectors)
-      .join(va, "id_a").join(vb, "id_b")
+  def nearDupPairs(vectors: DataFrame, threshold: Double): DataFrame =
+    graft.sql.PairJoins.bandedSelfPairs(
+      signed(vectors), idCol, bandKeys, payload = Seq("vec"))
+      .dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"),
-        cosineSimilarity(col("va"), col("vb")).as("cosine"))
+        cosineSimilarity(col("vec_a"), col("vec_b")).as("cosine"))
       .where(col("cosine") >= threshold)
-  }
 
   /** Cross-corpus near-dup pairs (id_l, id_r, cosine ≥ threshold):
     * left/right meet ONLY through shared band buckets — the embedding-

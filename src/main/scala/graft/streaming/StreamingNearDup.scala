@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.TextNormalizer
+import graft.dedup.{MinHashDeduplicator, TextNormalizer}
 
 /** Streaming near-duplicate detection: the batch MinHash + banded-LSH
   * pipeline ([[graft.dedup.MinHashDeduplicator]]) re-expressed over a
@@ -11,15 +11,15 @@ import graft.dedup.TextNormalizer
   * whose event times fall within one watermark delay of each other.
   *
   * Shape: banding is ROW-LOCAL (normalize → native `Shingles` →
-  * `MinHashSignature` kernels → band digests — byte-identical to the batch
-  * operator's signatures, so batch backfill and streaming ingest bucket
-  * identically); candidates come from a watermarked stream-stream
-  * self-join on `(band, bandSig)` with a time-range bound; verification
-  * is exact shingle-set Jaccard computed row-locally on the joined pair —
-  * no state beyond the join's own.
+  * `MinHashSignature` kernels → band keys — the batch operator's
+  * `MinHashDeduplicator.signature` and `bandKeys`, so batch backfill and
+  * streaming ingest bucket identically); candidates come from a
+  * watermarked stream-stream self-join on `(band, key)` with a time-range
+  * bound; verification is exact shingle-set Jaccard computed row-locally
+  * on the joined pair — no state beyond the join's own.
   *
   * Scale: join state holds only rows within the watermark window, keyed
-  * by uniformly-distributed 128-bit band signatures — state is bounded by
+  * by band slices of uniformly-distributed minima — state is bounded by
   * ingest-rate × delay, never by corpus size, and only band-colliding
   * rows ever pair (the LSH contract). Multi-band collisions are collapsed
   * by `dropDuplicatesWithinWatermark` on the pair key.
@@ -36,8 +36,8 @@ object StreamingNearDup {
       graft.sql.expressions.Shingles(
         org.apache.spark.sql.GraftBridge.expression(TextNormalizer.normalize(text)), k)))
 
-  /** (id, ts, sh, band, bandSig): row-local banding, same digests as
-    * `MinHashDeduplicator.bandSignatures`. The verify's distinct shingle
+  /** (id, ts, sh, band, key): row-local banding, the same keys as
+    * `MinHashDeduplicator.bandKeys`. The verify's distinct shingle
     * set `sh` is computed HERE — once per document, before the band
     * explode — and carried through the join instead of the raw normalized
     * text: computing it post-join re-ran the normalize+shingle kernel
@@ -49,9 +49,6 @@ object StreamingNearDup {
     */
   private def banded(df: DataFrame, idCol: String, textCol: String, tsCol: String,
       k: Int, numHashes: Int, numBands: Int): DataFrame = {
-    val rowsPerBand = numHashes / numBands
-    require(rowsPerBand * numBands == numHashes,
-      s"numBands ($numBands) must divide numHashes ($numHashes)")
     // spread to full parallelism BEFORE the kernel chain — BATCH ROUTE
     // ONLY: a single-file batch input otherwise runs every
     // normalize/minhash/shingle kernel on ONE core (measured: q183's
@@ -62,21 +59,16 @@ object StreamingNearDup {
       TextNormalizer.normalize(col(textCol)).as("norm"))
     (if (df.isStreaming) selected
      else graft.sql.functions.spread(selected, col("id")))
-      .withColumn("mh", org.apache.spark.sql.GraftBridge.column(
-        graft.sql.expressions.MinHashSignature(
-          graft.sql.expressions.Shingles(
-            org.apache.spark.sql.GraftBridge.expression(col("norm")), k),
-          numHashes)))
+      .withColumn("mh", MinHashDeduplicator.signature(
+        org.apache.spark.sql.GraftBridge.column(graft.sql.expressions.Shingles(
+          org.apache.spark.sql.GraftBridge.expression(col("norm")), k)),
+        numHashes))
       .withColumn("sh", shingleSet(col("norm"), k))
       // outer explode: InferFiltersFromGenerate must not clone the kernel
       // chain into a filter (the batch pipeline's documented trap)
-      .select(col("id"), col("ts"), col("sh"), explode_outer(expr(
-        s"""transform(sequence(0, ${numBands - 1}),
-           |  b -> struct(CAST(b AS INT) AS band,
-           |    md5(array_join(transform(slice(mh, b * $rowsPerBand + 1, $rowsPerBand),
-           |      x -> CAST(x AS STRING)), ',')) AS bandSig))""".stripMargin)).as("bs"))
       .select(col("id"), col("ts"), col("sh"),
-        col("bs.band").as("band"), col("bs.bandSig").as("bandSig"))
+        explode_outer(MinHashDeduplicator.bandKeys(col("mh"), numHashes, numBands)).as("bk"))
+      .select(col("id"), col("ts"), col("sh"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
   /** Verified near-dup pairs `(id_a, id_b, ts_a, jaccard)` among stream

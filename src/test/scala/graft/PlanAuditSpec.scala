@@ -2,7 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.sql.expressions.SimHash64
+import graft.sql.expressions.{HyperplaneSignature, MinHashSignature, SimHash64}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -266,21 +268,46 @@ class PlanAuditSpec extends SparkTestBase {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("q36's pair stage: signed once, long signatures, distinct hashes its own keys") {
+  /** LSH pair queries of every signature family, with the kernel each
+    * runs: the kernel must run once per row, whatever pairs the band join
+    * forms.
+    */
+  private val signingKernels: Seq[(String, Class[_ <: Expression])] = Seq(
+    "q36_simhash_pairs" -> classOf[SimHash64],
+    "q20_dedup_minhash" -> classOf[MinHashSignature],
+    "q32_jaccard_ngram" -> classOf[MinHashSignature],
+    "q188_neardup_core" -> classOf[MinHashSignature],
+    "q22_ann_lsh" -> classOf[HyperplaneSignature])
+
+  /** Builds and collects `name`, asserting its `kernel` ran in exactly one
+    * plan node across the pin and the final plan (reused exchanges are
+    * leaves here), and never in a Filter, where an inferred isnotnull
+    * re-signs every row. Returns the built frame.
+    */
+  private def assertSignedOnce(name: String, kernel: Class[_ <: Expression]): DataFrame = {
     val helper = new AdaptiveSparkPlanHelper {}
     val (df, plans) = executing {
-      val q = SparkEntry.queries("q36_simhash_pairs")(spark, dir)
+      val q = SparkEntry.queries(name)(spark, dir)
       q.collect()
       q
     }
-    // the kernel must run once per document: one plan node across the
-    // checkpoint and the final plan (reused exchanges are leaves here), and
-    // never in a Filter, where an inferred isnotnull re-signs every row
     val signing = plans.flatMap(p => helper.collect(p) {
-      case n if n.expressions.exists(_.exists(_.isInstanceOf[SimHash64])) => n
+      case n if n.expressions.exists(_.exists(e => kernel.isInstance(e))) => n
     })
-    assert(signing.size === 1, signing.map(_.simpleString(10)).mkString("\n"))
-    assert(!signing.head.isInstanceOf[FilterExec], signing.head.simpleString(10))
+    assert(signing.size === 1,
+      s"$name: ${kernel.getSimpleName} in ${signing.size} plan nodes\n" +
+        signing.map(_.simpleString(10)).mkString("\n"))
+    assert(!signing.head.isInstanceOf[FilterExec], s"$name: ${signing.head.simpleString(10)}")
+    df
+  }
+
+  test("LSH pair queries sign each row once: one kernel node per query, never a Filter") {
+    signingKernels.foreach { case (name, kernel) => assertSignedOnce(name, kernel) }
+  }
+
+  test("q36's pair stage: signed once, long signatures, distinct hashes its own keys") {
+    val helper = new AdaptiveSparkPlanHelper {}
+    val df = assertSignedOnce("q36_simhash_pairs", classOf[SimHash64])
     // the final plan reads the pinned signatures: the spread exchange ran in
     // the checkpoint job, the band join broadcasts one side, and the
     // distinct hashes on its own keys (the pin reports no doc_id

@@ -102,6 +102,60 @@ class DedupSpec extends SparkTestBase {
     assert(want.nonEmpty && got === want)
   }
 
+  test("minhash candidatePairs equal the md5 band-digest join they replace") {
+    // the band key is the seed-ordered slice itself; the reference keys
+    // each band by the md5 of its comma-joined minima (the digest the SQL
+    // oracle also computes) — equal slices are exactly equal digests
+    import org.apache.spark.sql.GraftBridge
+    import graft.sql.expressions.Shingles
+    val (k, numHashes, numBands) = (5, 12, 6)
+    val rowsPerBand = numHashes / numBands
+    // two-word variants of one sentence: pairs whose bands agree in some
+    // but not all of their minima, so a key that dropped or reordered
+    // minima would change the candidate set
+    val words = "the quick brown fox jumps over the lazy dog while a cat sleeps".split(" ")
+    val variants = (10 until 30).map(i => (i.toLong,
+      words.updated(i % words.length, s"w$i").updated(i * 7 % words.length, s"v$i")
+        .mkString(" ")))
+    val more = docs.union((variants :+ (8L, null: String)).toDF("doc_id", "text"))
+    val m = new MinHashDeduplicator().setIdCol("doc_id").setTextCol("text")
+      .setShingleSize(k).setNumHashes(numHashes).setNumBands(numBands)
+    val bands = more.select($"doc_id", MinHashDeduplicator.signature(
+        GraftBridge.column(Shingles(GraftBridge.expression(TextNormalizer.normalize($"text")), k)),
+        numHashes).as("mh"))
+      .select($"doc_id", explode_outer(expr(
+        s"""transform(sequence(0, ${numBands - 1}),
+           |  b -> struct(CAST(b AS INT) AS band,
+           |    md5(array_join(transform(slice(mh, b * $rowsPerBand + 1, $rowsPerBand),
+           |      x -> CAST(x AS STRING)), ',')) AS bandSig))""".stripMargin)).as("bs"))
+      .select($"doc_id", $"bs.band".as("band"), $"bs.bandSig".as("bandSig"))
+    val want = bands.select($"doc_id".as("id_a"), $"band", $"bandSig")
+      .join(bands.select($"doc_id".as("id_b"), $"band", $"bandSig"), Seq("band", "bandSig"))
+      .where($"id_a" < $"id_b").select("id_a", "id_b").distinct()
+      .as[(Long, Long)].collect().toSet
+    val got = m.candidatePairs(more).as[(Long, Long)].collect().toSet
+    assert(want.contains((1L, 2L)) && want.size > 1 && !want.exists(_._2 == 8L))
+    assert(got === want)
+  }
+
+  test("minhash transform on an empty frame and on null texts: no rows, same schema") {
+    val m = new MinHashDeduplicator().setIdCol("doc_id").setTextCol("text")
+      .setShingleSize(5).setNumHashes(12).setNumBands(6).setThreshold(0.0)
+    val schema = m.transform(docs).schema
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val nulls = Seq((1L, null: String), (2L, null: String), (3L, null: String))
+      .toDF("doc_id", "text")
+    for ((what, in) <- Seq("empty" -> empty, "all-null" -> nulls)) {
+      // transform pins the signatures when called, so a failure on these
+      // inputs would surface here, before any action
+      val pairs = m.transform(in)
+      val cands = m.candidatePairs(in)
+      assert(pairs.schema === schema, what)
+      assert(pairs.collect().isEmpty, what)
+      assert(cands.collect().isEmpty, what)
+    }
+  }
+
   // mirrors TextNormalizer.normalize as Spark SQL text: whitespace map
   // (the Spark-flavored translate fragment — chr() is mod-256 in Spark,
   // so the DuckDB oracles' chr-concat form would silently map the wrong

@@ -38,6 +38,23 @@ class SimilaritySpec extends SparkTestBase {
     assert(pairs === Set((1L, 3L))) // only the true near-dup survives verification
   }
 
+  test("LSH pair methods on an empty frame and on null vectors: no rows, same schema") {
+    val lsh = new RandomHyperplaneLSH(numPlanes = 16, numBands = 4)
+    val schema = lsh.nearDupPairs(vecs, 0.9).schema
+    val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val nulls = Seq((1L, null: Array[Float]), (2L, null: Array[Float]))
+      .toDF("vec_id", "embedding")
+    for ((what, in) <- Seq("empty" -> empty, "all-null" -> nulls)) {
+      // the pair methods pin the signatures when called, so a failure on
+      // these inputs would surface here, before any action
+      val pairs = lsh.nearDupPairs(in, 0.9)
+      val cands = lsh.candidatePairs(in)
+      assert(pairs.schema === schema, what)
+      assert(pairs.collect().isEmpty, what)
+      assert(cands.collect().isEmpty, what)
+    }
+  }
+
   test("LSH signatures are deterministic across invocations") {
     val lsh = new RandomHyperplaneLSH(numPlanes = 8, numBands = 2)
     val a = lsh.bandSignatures(vecs).collect().map(_.toString).sorted
