@@ -80,8 +80,8 @@ object SimilarityQueries {
     // IVF top-k: 16-cell coarse quantizer (lowest-id seeds + one Lloyd
     // step), probe the 4 nearest cells per query — partition-pruned ANN.
     // Explicit build/search split: the index is built once (centroids
-    // localCheckpoint-ed) and the query batch probes it without rescanning
-    // the corpus for centroid learning.
+    // held as a local frame) and the query batch probes it without
+    // rescanning the corpus for centroid learning.
     "q35_ann_ivf" -> ((s, dir) => {
       val e = vectors(s, dir)
       val ivf = new IvfCosineIndex(numCentroids = 16, nprobe = 4, dim = Some(64))
@@ -183,9 +183,9 @@ object SimilarityQueries {
       val ivf = new IvfCosineIndex(numCentroids = 16, nprobe = 4, dim = Some(64))
       val idx = ivf.build(e)
       val pq = new ProductQuantizer(numSubspaces = 8, codebookSize = 16, dim = 64)
-      // the codebook is m×k rows consumed by BOTH encode and the ADC
-      // tables — materialize once (the IvfIndex.build centroid discipline)
-      val cb = pq.fit(e).localCheckpoint()
+      // the codebook is a local frame of m×k rows: encode reads it as
+      // literals, the ADC tables broadcast it
+      val cb = pq.fit(e)
       val codes = pq.encode(e, cb)
       val queries = e.where(col("vec_id") < 5)
       val cands = ivf.probes(queries, idx)
@@ -213,9 +213,8 @@ object SimilarityQueries {
       // tree behind indefinitely on long-lived hosts — sweep it when the
       // JVM exits (registered once per process; the path is pid-constant)
       SimilarityQueries.cleanupOnExit(root)
-      // offline half: fit and persist (overwrite keeps reruns idempotent);
-      // buildTo fuses the centroid train into its own write action (r16)
-      ivf.buildTo(e, s"$root/ivf")
+      // offline half: fit and persist (overwrite keeps reruns idempotent)
+      ivf.build(e).save(s"$root/ivf")
       ProductQuantizer.saveCodebook(
         new ProductQuantizer(numSubspaces = 8, codebookSize = 16, dim = 64).fit(e),
         s"$root/pq")
@@ -287,7 +286,7 @@ object SimilarityQueries {
       val opq = new graft.similarity.OpqRotation(
         numSubspaces = 8, codebookSize = 16, dim = 64)
       // codebook is m×k rows consumed by encode AND the ADC tables —
-      // materialize once (the q116 discipline)
+      // read from the fixture once
       val cb = model.codebook.localCheckpoint()
       val rotated = opq.rotate(e, model.rotation)
       val pq = graft.similarity.ProductQuantizer.forCodebook(cb)
@@ -298,7 +297,7 @@ object SimilarityQueries {
     }),
 
     // incremental IVF append: index built on the first 400 vectors only,
-    // the rest arrive as a new batch and get ONE broadcast-centroid
+    // the rest arrive as a new batch and get ONE row-local
     // assignment pass — no re-training, no corpus rescan
     "q114_ivf_append" -> ((s, dir) => {
       val e = vectors(s, dir)

@@ -16,18 +16,26 @@ import graft.sql.functions.{cosineSimilarity, vectorMean}
   * complements [[RandomHyperplaneLSH]]: LSH buckets by random signs, IVF by
   * learned data clusters (better for clustered corpora).
   *
-  * The quantizer is deterministic and oracle-replayable: seed centroids =
-  * the `numCentroids` lowest-id vectors, refined by ONE Lloyd iteration
-  * (per-dimension member mean; cosine is scale-invariant so the mean is
-  * left unnormalized). Swap in full distributed k-means offline for
-  * production-quality cells — the index/search plumbing is unchanged.
-  *
-  * Scale: centroids are plan literals (numCentroids is small by design,
-  * and their elements are bounded by [[NearestCell.MaxCentroidValues]]);
-  * assignment is one streamed pass over the corpus; search touches only
-  * `nprobe / numCentroids` of the data — the whole point of IVF at 100 TB.
-  * The inverted lists shuffle on cluster id; skewed clusters are bounded by
-  * refining with more centroids.
+  * The trained-quantizer invariants it shares with [[KMeans]] and
+  * [[ProductQuantizer]]:
+  *  - cells are driver rows: the seeds are the `numCentroids` lowest-id
+  *    vectors from one top-k collect (cid = the seed id's dense 0-based
+  *    rank), refined by ONE Lloyd step whose means are one collect
+  *    (per-dimension member mean, left unnormalized: cosine is
+  *    scale-invariant); their elements are bounded by
+  *    [[NearestCell.MaxCentroidValues]];
+  *  - one kernel: training, listing and probing select cells row-locally
+  *    with [[NearestCell]]'s cosine shapes against the cells as literals
+  *    (ties to the lowest cid), with no shuffle and no join;
+  *  - the drop rule: a cell whose mean is missing or null (no members, or
+  *    none with an element when `dim` is None) is dropped — its list would
+  *    be empty and probes go to real cells ([[KMeans]] and PQ keep such a
+  *    cell at its seed instead);
+  *  - every centroid set an index holds is a local frame, and each
+  *    assignment or probe is an eager snapshot of the centroids it reads.
+  * Assignment is one streamed pass over the corpus; search touches only
+  * `nprobe / numCentroids` of the data. Swap in [[KMeans]] centroids
+  * ([[buildWith]]) for production-quality cells; the plumbing is the same.
   */
 class IvfCosineIndex(
     numCentroids: Int,
@@ -41,130 +49,82 @@ class IvfCosineIndex(
 
   private def dvec(c: Column): Column = c.cast("array<double>")
 
+  private def projected(candidates: DataFrame): DataFrame =
+    candidates.select(col(idCol), dvec(col(vecCol)).as("cv"))
+
   /** (id, cv) spread to full parallelism: assignment evaluates numCentroids
     * cosine kernels per row, which a single-split input would serialize.
     */
   private def corpus(candidates: DataFrame): DataFrame =
-    graft.sql.functions.spread(
-      candidates.select(col(idCol), dvec(col(vecCol)).as("cv")), col(idCol))
+    graft.sql.functions.spread(projected(candidates), col(idCol))
 
-  /** The centroid set collected to the driver; centroids are driver-tiny
-    * by contract (numCentroids rows, at most
-    * [[NearestCell.MaxCentroidValues]] elements in total). Every assignment
-    * and probe reads its cells from such a snapshot as literals:
-    * [[NearestCell]] replicates `max_by(cid, struct(cos, -cid))` (and the
-    * probe window) bit-exactly, with no shuffle.
-    */
+  /** The centroid set collected to the driver as (cid, centroid) cells. */
   private def collectCells(cents: DataFrame): Array[Row] =
     cents.select(col("cid").cast("long"), dvec(col("centroid"))).collect()
 
+  /** `rows` as a local frame of `df`'s schema: no lineage, exact size stats. */
+  private def local(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+
   /** The corpus frame with a row-local `cid` column; empty (same schema)
-    * when the centroid set is empty. */
-  private def withNearest(e: DataFrame, cents: DataFrame): DataFrame = {
-    val cells = collectCells(cents)
+    * when there are no cells. */
+  private def withNearest(e: DataFrame, cells: Array[Row]): DataFrame =
     if (cells.isEmpty) e.withColumn("cid", lit(null).cast("long")).where(lit(false))
     else e.withColumn("cid", NearestCell.column(NearestCell.CosineArgMax, col("cv"), cells))
-  }
 
-  /** (id, cid): nearest centroid per vector (ties: lowest cid), computed
-    * row-locally by [[NearestCell]]'s cosine arg-max against the collected
-    * centroids — no argmax shuffle. PRECONDITION (shared by every
-    * declared query): one row per non-null id; the old groupBy(id) shape
-    * collapsed duplicate ids to one arbitrary-winner row where this
-    * assigns each row independently.
-    */
-  private def assign(vectors: DataFrame, cents: DataFrame): DataFrame =
-    withNearest(vectors, cents).select(col(idCol), col("cid"))
-
-  /** Learned centroids (cid, centroid): lowest-id seeds + one Lloyd step.
-    * A cell that wins no members drops out of the Lloyd means — harmless
-    * for IVF (its inverted list would be empty; probes just go to real
-    * cells), unlike PQ where dense codes are a layout contract.
+  /** Learned centroids (cid, centroid) as a local frame: lowest-id seeds +
+    * one Lloyd step, under the drop rule. Empty when no id is non-null.
     */
   def centroids(candidates: DataFrame): DataFrame = {
-    val e = corpus(candidates)
-    // seeds picked by RANK (order-by + limit → TakeOrderedAndProject), not a
-    // value predicate, so sparse/offset id spaces still yield exactly
-    // numCentroids seeds; cid = the seed's dense 0-based rank in id order
-    // (NOT the id cast to long — string ids like UUIDs cast to NULL, and
-    // NULL never equi-joins, which would make every search silently return
-    // zero rows). Rank order equals id order, so "lowest cid" tie-breaks
-    // pick the same seed id keys would.
-    val seeds = Seeding.kLowestIdRanks(e, idCol, numCentroids, "cid")
-      .select(col("cid"), col("cv").as("centroid"))
-    // row-local seed assignment; rows with a null id stay out of the means
-    val members = withNearest(e, seeds).where(col(idCol).isNotNull)
-    // one groupBy(cid), one shuffle, whether `dim` is known or not (see
-    // VectorMean for the length contract); with `None` a cell whose
-    // members hold no element at all has a null mean and no centroid
-    members.groupBy(col("cid"))
-      .agg(vectorMean(col("cv"), dim).as("centroid"))
+    val seeds = Seeding.seedRows(projected(candidates), idCol, col("cv"), numCentroids)
+    // rows with a null id stay out of the means; one groupBy(cid) whether
+    // `dim` is known or not (see VectorMean for the length contract)
+    val means = withNearest(corpus(candidates).where(col(idCol).isNotNull), seeds)
+      .groupBy(col("cid")).agg(vectorMean(col("cv"), dim).as("centroid"))
       .where(col("centroid").isNotNull)
+    local(means, if (seeds.isEmpty) Array.empty else means.collect())
   }
 
   /** Inverted lists: (id, cid) under the refined centroids.
     *
-    * Eager: the call trains the centroids and collects them to the
-    * driver; the returned frame assigns against that snapshot and never
-    * retrains. Cardinality: one row per input row — ids are not
-    * deduplicated, a null id keeps its row, a null vector gets the lowest
-    * cid.
+    * Eager: the call trains the centroids; the returned frame assigns
+    * against them and never retrains. Cardinality: one row per input row —
+    * ids are not deduplicated, a null id keeps its row, a null vector gets
+    * the lowest cid.
     */
-  def index(candidates: DataFrame): DataFrame = {
-    val e = corpus(candidates)
-    assign(e, centroids(candidates))
-  }
+  def index(candidates: DataFrame): DataFrame =
+    withNearest(corpus(candidates), collectCells(centroids(candidates)))
+      .select(col(idCol), col("cid"))
 
   /** One-time index build: the (centroids, inverted-lists) pair that
     * [[search(queries:org\.apache\.spark\.sql\.DataFrame,index:graft\.similarity\.IvfIndex,k:Int)* search]]
-    * probes. The corpus is scanned for assignment ONCE here; serving a
-    * query batch never rescans it (pre-split, `search` re-derived the
-    * centroids and lists per call — three-plus corpus passes per search,
-    * defeating IVF's purpose at scale).
-    *
-    * Centroids are tiny (`numCentroids` rows) and localCheckpoint-ed so
-    * the lists job and every probe reuse the materialized result instead
-    * of re-running seed-assign-Lloyd. The lists stay a lazy plan: persist
-    * them (`index.lists.persist()` / write bucketed by `cid`) when serving
-    * many query batches from one build.
+    * probes, so serving a query batch never rescans the corpus to train.
+    * The centroids are a local frame; the lists stay a lazy plan: persist
+    * them (`index.lists.persist()`, or [[IvfIndex.save]]) when serving many
+    * query batches from one build.
     */
   def build(candidates: DataFrame): IvfIndex = {
-    val cents = centroids(candidates).localCheckpoint()
+    val cents = centroids(candidates)
     IvfIndex(cents, listRows(candidates, cents))
-  }
-
-  /** [[build]] + [[IvfIndex.save]] fused for the offline-train half of a
-    * train-then-serve pipeline (r16): the centroids are computed INSIDE
-    * their own write action and the lists are assigned against the
-    * written copy (parquet round-trips doubles bit-exactly), which drops
-    * the separate centroid-localCheckpoint action `build(...).save(...)`
-    * pays. One corpus pass for training, one for listing — same passes,
-    * one fewer blocking job.
-    */
-  def buildTo(candidates: DataFrame, path: String): Unit = {
-    centroids(candidates).coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/centroids")
-    val spark = candidates.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids").localCheckpoint()
-    IvfIndex(cents, listRows(candidates, cents)).saveListsOnly(path)
   }
 
   /** Index build against EXTERNALLY-trained centroids (cid, centroid) —
     * the [[KMeans]] integration: train real cluster structure with
     * multi-step Lloyd offline, then list the corpus under those cells
-    * with the same one-pass assignment. `numCentroids`/`nprobe` keep
+    * with the same one-pass assignment. The centroids are collected into
+    * a local frame when this is called. `numCentroids`/`nprobe` keep
     * governing probe width, so construct the index with numCentroids =
     * the trained k.
     */
   def buildWith(candidates: DataFrame, cents: DataFrame): IvfIndex = {
     val c = cents.select(col("cid"), dvec(col("centroid")).as("centroid"))
-      .localCheckpoint()
-    IvfIndex(c, listRows(candidates, c))
+    val held = local(c, c.collect())
+    IvfIndex(held, listRows(candidates, held))
   }
 
   /** Assignment (id, cid) of NEW vectors to a prebuilt index's centroids —
     * the incremental-append path: a nightly embedding batch joins an
-    * existing index with ONE broadcast-centroid pass over the batch, no
+    * existing index with ONE row-local pass over the batch, no
     * quantizer re-training, no rescan of the indexed corpus. (Centroids
     * drift as the corpus grows; rebuild cadence is the caller's policy —
     * the standard IVF operational trade.)
@@ -175,8 +135,7 @@ class IvfCosineIndex(
     * row of `vectors`, as in [[index]].
     */
   def assignNew(index: IvfIndex, vectors: DataFrame): DataFrame =
-    assign(corpus(vectors),
-      index.centroids.select(col("cid"), dvec(col("centroid")).as("centroid")))
+    withNearest(corpus(vectors), collectCells(index.centroids)).select(col(idCol), col("cid"))
 
   /** The index with `vectors`' inverted-list rows appended. (Through
     * [[listRows]], so external centroids get the same array<double>
@@ -193,12 +152,9 @@ class IvfCosineIndex(
     * [[graft.streaming.IvfStreamMaintainer]] writes them straight into a
     * saved layout per micro-batch.
     */
-  def listRows(vectors: DataFrame, cents: DataFrame): DataFrame = {
-    val c = cents.select(col("cid"), dvec(col("centroid")).as("centroid"))
-    val e = corpus(vectors)
-    withNearest(e, c).where(col(idCol).isNotNull)
+  def listRows(vectors: DataFrame, cents: DataFrame): DataFrame =
+    withNearest(corpus(vectors), collectCells(cents)).where(col(idCol).isNotNull)
       .select(col(idCol), col("cv"), col("cid"))
-  }
 
   /** (query_id, qv, cid): each query's `nprobe` nearest cells — the probe
     * set every IVF-family search starts from (shared by [[search]] and
@@ -211,11 +167,9 @@ class IvfCosineIndex(
     */
   def probes(queries: DataFrame, index: IvfIndex): DataFrame = {
     val qv = queries.select(col(idCol).as("query_id"), dvec(col(vecCol)).as("qv"))
-    // row-local top-nprobe (r17, guide §2.4): the old shape cross-joined
-    // every query against the broadcast centroids and ranked the cells
-    // with a per-query row_number window — a query-keyed exchange + sort
-    // per search — when the whole selection is computable in place
-    // against centroid literals with the identical ordering
+    // row-local top-nprobe against the centroid literals: no query-keyed
+    // exchange or sort, the order of `row_number() OVER (ORDER BY cos
+    // DESC, cid)` over a crossJoin
     qv.withColumn("cid", explode(NearestCell.column(NearestCell.CosineTopN(nprobe),
         col("qv"), collectCells(index.centroids))))
       .select(col("query_id"), col("qv"), col("cid"))
@@ -265,13 +219,6 @@ case class IvfIndex(centroids: DataFrame, lists: DataFrame) {
     */
   def save(path: String): Unit = {
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    saveListsOnly(path)
-  }
-
-  /** The lists half of [[save]] — shared with
-    * [[IvfCosineIndex.buildTo]], which writes the centroids itself.
-    */
-  private[similarity] def saveListsOnly(path: String): Unit = {
     // cluster the write on cid first: without it every task holds rows of
     // every cid and partitionBy fans each task out into every directory
     // (tasks × cids small files — and as many open writers per task);

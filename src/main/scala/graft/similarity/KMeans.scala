@@ -7,36 +7,30 @@ import graft.sql.expressions.NearestCell
 import graft.sql.functions.vectorMean
 
 /** Fixed-iteration distributed k-means (Lloyd's algorithm) under squared
-  * L2 — the "more Lloyd refinement steps" production knob that
-  * [[IvfCosineIndex]] and [[ProductQuantizer]] document but deliberately
-  * pin to one step for oracle replay. This operator IS that knob as a
-  * first-class citizen: train real cluster structure offline, then hand
-  * the centroids to the IVF/PQ plumbing (both consume a plain
-  * (cid, centroid) frame).
+  * L2: trains real cluster structure offline and hands the centroids to
+  * the IVF/PQ plumbing, which consume a plain (cid, centroid) frame.
   *
   * Beyond-reference operator (LLM-pipeline extension from the build brief).
   *
-  * Deterministic and oracle-replayable, matching the PQ discipline: seeds
-  * are the `k` lowest-id vectors (cid = dense 0-based rank in id order),
-  * each of the `iters` Lloyd steps assigns by argmin squared-L2 (ties to
-  * the lowest cid; the distance kernel accumulates in index order, so
-  * both engines add the same terms in the same order) and recomputes each
-  * centroid as the per-dimension member mean. A cluster that loses every
-  * member keeps its previous centroid (the standard empty-cluster guard —
-  * without it the next assignment would silently drop a cid).
-  *
-  * Scale, per iteration: centroids are k driver rows, passed to the round
-  * as array literals (hence `k * dim` ≤ [[NearestCell.MaxCentroidValues]]);
-  * assignment is a row-local argmin ([[NearestCell]] under squared L2) in
-  * ONE streamed pass over the corpus, and the new means are one
-  * partial-aggregated groupBy(cid) of one
-  * [[graft.sql.functions.vectorMean]] (two buffer fields at any `dim`),
-  * collected: one collect per round, no checkpoint, no join. The corpus is
-  * scanned `iters + 1` times (the inherent Lloyd cost) and shuffles only
-  * the k partial means per task. Every fit returns a local (cid,
-  * centroid) frame, so no Lloyd lineage reaches the caller's plan. Run
-  * length is fixed, as in [[graft.graph.PageRank]]: it never depends on
-  * float-drift convergence tests.
+  * The trained-quantizer invariants it shares with [[IvfCosineIndex]] and
+  * [[ProductQuantizer]]:
+  *  - cells are driver rows: seeds come from one top-k collect
+  *    (`Seeding.seedRows`: cid = the seed id's dense 0-based rank), and
+  *    each Lloyd round is one collect of the k means, so `k * dim` ≤
+  *    [[NearestCell.MaxCentroidValues]];
+  *  - one kernel: a round assigns row-locally by [[NearestCell]]'s
+  *    `L2ArgMin` against the cells as literals (ties to the lowest cid, a
+  *    null distance nearest) and averages with one groupBy(cid) of
+  *    [[graft.sql.functions.vectorMean]] — no checkpoint, no join;
+  *  - the keep rule: a cell that gets no (or a null) mean keeps its
+  *    previous centroid, so k never shrinks ([[IvfCosineIndex]] drops such
+  *    a cell instead);
+  *  - every fit returns a local frame, so no Lloyd lineage reaches the
+  *    caller's plan, and [[assign]] is an eager snapshot of the centroids
+  *    it is given.
+  * The corpus is scanned `iters + 1` times and shuffles only the k partial
+  * means per task. Run length is fixed, as in [[graft.graph.PageRank]]: it
+  * never depends on float-drift convergence tests.
   */
 class KMeans(
     k: Int,
@@ -99,32 +93,23 @@ class KMeans(
   def seeds(vectors: DataFrame): DataFrame =
     centroidFrame(vectors, seedRows(vectors), refined = false)
 
-  private def seedRows(vectors: DataFrame): Array[Row] = {
-    val top = projected(vectors).where(col(idCol).isNotNull)
-      .orderBy(col(idCol)).limit(k).collect()
-    // `==` equates -0.0 with 0.0 and `equals` NaN with NaN, as Spark does
-    val same = (a: Any, b: Any) => a == b || java.util.Objects.equals(a, b)
-    val ranks = top.indices.scanLeft(-1L)((r, i) =>
-      if (i > 0 && same(top(i).get(0), top(i - 1).get(0))) r else r + 1).tail
-    top.zip(ranks).map { case (r, rank) => Row(rank, r.get(1)) }
-  }
+  private def seedRows(vectors: DataFrame): Array[Row] =
+    Seeding.seedRows(projected(vectors), idCol, col("cv"), k)
 
   /** `cvFrame` plus `b`: the nearest cell's (cid, d2) under squared L2. */
   private def nearest(cvFrame: DataFrame, cells: Array[Row]): DataFrame =
     cvFrame.withColumn("b", NearestCell.column(NearestCell.L2ArgMin, col("cv"), cells))
 
-  /** (id, cid, d2): nearest centroid per vector under squared L2; ties to
-    * the lowest cid — computed row-locally against the collected centroids
-    * ([[NearestCell]]'s `L2ArgMin` replicates the old
-    * `min_by(struct(cid, d2), struct(d2, cid))` bit-exactly). PRECONDITION
-    * (every declared query satisfies it): one row per non-null id — the
-    * old groupBy(id) collapsed duplicate ids to one arbitrary-winner row.
+  /** (id, cid, d2): nearest centroid per vector under squared L2, ties to
+    * the lowest cid, by [[NearestCell]]'s `L2ArgMin`. Eager: `centroids`
+    * is collected when this is called and the frame assigns against that
+    * snapshot. One row per input row: duplicate ids are not collapsed and
+    * a null id keeps its row; no rows for an empty centroid set.
     */
   def assign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
     val cells = centroids.select(col("cid").cast("long"),
       col("centroid").cast("array<double>")).collect()
     if (cells.isEmpty)
-      // the old crossJoin against an empty broadcast joined nothing
       corpus(vectors).select(col(idCol), lit(null).cast("long").as("cid"),
         lit(null).cast("double").as("d2")).where(lit(false))
     else nearest(corpus(vectors), cells)

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * properties (OpqRotationSpec: orthogonality, monotone error, beats
   * identity on correlated data) rather than an oracle-gated query.
   *
-  * Scale shape, per iteration: PQ training (the [[ProductQuantizer]]
-  * shuffles — tiny codebook aggregations), one broadcast-codebook decode
+  * Scale shape, per iteration: PQ training (driver-row codebooks, one
+  * tiny mean aggregation per Lloyd step), one broadcast-codebook decode
   * join, and ONE `d²`-wide partial aggregation for `M` (4096 doubles at
   * d=64 — each partition contributes one accumulator row via the same
   * grid-sum shape as the codebook means; nothing is collected but the
@@ -74,23 +74,18 @@ class OpqRotation(
     var r = eye
     var cb: DataFrame = null
     var prevRotated: DataFrame = null
-    var prevCb: DataFrame = null
     for (_ <- 0 until iters) {
       val rotated = rotate(base, r).localCheckpoint()
-      cb = (if (lloydSteps <= 0) pq.fit(rotated)
-            else pq.fitKMeans(rotated, lloydSteps)).localCheckpoint()
+      // a local frame: the codebooks are driver rows
+      cb = if (lloydSteps <= 0) pq.fit(rotated) else pq.fitKMeans(rotated, lloydSteps)
       val recon = reconstruct(rotated, cb)
       r = procrustes(crossProductMatrix(base, recon))
-      // the previous iteration's corpus-sized rotated checkpoint and its
-      // superseded codebook are fully consumed once M is on the driver —
-      // release their blocks NOW instead of waiting for nondeterministic
-      // GC-driven cleanup, so live storage is bounded at base + one
-      // iteration's frames regardless of `iters`. The final cb is never
-      // unpersisted (it ships in the Model).
+      // the previous iteration's corpus-sized rotated checkpoint is fully
+      // consumed once M is on the driver — release its blocks NOW instead
+      // of waiting for nondeterministic GC-driven cleanup, so live storage
+      // is bounded at base + one iteration's frame regardless of `iters`
       if (prevRotated != null) prevRotated.unpersist(blocking = false)
-      if (prevCb != null) prevCb.unpersist(blocking = false)
       prevRotated = rotated
-      prevCb = cb
     }
     if (prevRotated != null) prevRotated.unpersist(blocking = false)
     // the corpus-sized base checkpoint is fully consumed too — release it
@@ -112,8 +107,8 @@ class OpqRotation(
   }
 
   /** (idCol, __recon): each vector's PQ reconstruction — encode against
-    * the broadcast codebook, then stitch the m centroid slices back in
-    * subspace order (row-local array fold).
+    * the codebook, join its centroids back, then stitch the m centroid
+    * slices back in subspace order (row-local array fold).
     */
   private def reconstruct(rotated: DataFrame, codebook: DataFrame): DataFrame =
     pq.encode(rotated, codebook)

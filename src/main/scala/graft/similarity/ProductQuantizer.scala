@@ -1,7 +1,11 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.sql.expressions.NearestCell
+import graft.sql.functions.vectorMean
 
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
   * Neighbor Search", TPAMI 2011): split each d-dim vector into `m`
@@ -14,19 +18,26 @@ import org.apache.spark.sql.functions._
   *
   * Beyond-reference operator (LLM-pipeline extension from the build brief).
   *
-  * Deterministic, oracle-replayable training (the [[IvfCosineIndex]]
-  * discipline): per subspace, seed centroids are the `k` lowest-id
-  * vectors' slices refined by ONE Lloyd step under squared-L2; argmin
-  * ties break to the lowest code. Distances are SEQUENTIAL left-folds
-  * over the 8-dim slices (`aggregate(zip_with(...))`), so both engines
-  * add the same terms in the same order.
-  *
-  * Scale: codebooks are m×k rows (broadcast); training is one streamed
-  * assignment pass + one partial-aggregated vector mean per (subspace,
-  * code); encoding is row-local against the broadcast codebook. Nothing
-  * shuffles but the tiny codebook aggregation. ADC query scoring
-  * ([[adcSearch]]) builds a per-query distance table (m×k entries) and
-  * scores codes with lookups — never touching raw vectors.
+  * The trained-quantizer invariants it shares with [[KMeans]] and
+  * [[IvfCosineIndex]]:
+  *  - one slicing: `subvectors` is each vector's m slices as one
+  *    `array<array<double>>`; everything per-subspace reads it;
+  *  - cells are driver rows: the seeds are the `k` lowest-id vectors from
+  *    one top-k collect (code = the seed id's dense 0-based rank, so codes
+  *    are dense 0..k-1 in every subspace), refined by ONE Lloyd step under
+  *    squared L2 whose means are one collect; the codebook is m×k rows;
+  *  - one kernel: [[fit]] and [[encode]] pick each subspace's code
+  *    row-locally with [[NearestCell]]'s `L2ArgMin` against that subspace's
+  *    cells as literals (ties to the lowest code, a null distance nearest),
+  *    with no join and no shuffle; [[encode]] is an eager snapshot of the
+  *    codebook it is given;
+  *  - the keep rule: a code that wins no members keeps its seed slice, as
+  *    in [[KMeans]], so k never shrinks ([[IvfCosineIndex]] drops such a
+  *    cell instead).
+  * Distances accumulate in index order, so both engines add the same
+  * terms in the same order. ADC query scoring ([[adcSearch]]) builds a
+  * per-query distance table (m×k entries) and scores codes with lookups —
+  * never touching raw vectors.
   */
 class ProductQuantizer(
     numSubspaces: Int,
@@ -47,43 +58,62 @@ class ProductQuantizer(
   private def l2sq(a: Column, b: Column): Column =
     graft.sql.functions.squaredL2(a, b)
 
-  /** (idCol, sub, slice): the m subvectors of each input vector. */
-  private def slices(vectors: DataFrame): DataFrame =
-    graft.sql.functions.spread(
-      vectors.select(col(idCol),
-        posexplode(expr(
-          s"transform(sequence(0, ${numSubspaces - 1}), j -> slice($vecCol, j * $subDim + 1, $subDim))"))
-          .as(Seq("sub", "slice")))
-        .select(col(idCol), col("sub"), col("slice").cast("array<double>").as("slice")),
-      col(idCol))
+  /** `vecCol`'s m contiguous subvectors, `array<array<double>>`. One
+    * `slice` per subspace, not a lambda: `vecCol` is then referenced m
+    * times, so an expensive `vecCol` (OPQ's rotation) is not inlined into
+    * a lambda that would run it once per subspace.
+    */
+  private def subvectors: Column = array((0 until numSubspaces).map(j =>
+    slice(col(vecCol), j * subDim + 1, subDim)): _*).cast("array<array<double>>")
 
-  /** Learned codebooks (sub, code, centroid): per-subspace k-lowest-id
-    * seeds + one Lloyd step. `code` is the seed's rank (0-based) in id
-    * order, so codes are dense 0..k-1 in every subspace.
+  /** (idCol, sv) spread to full parallelism: each row evaluates m×k
+    * distance kernels, which a single-split input would serialize.
+    */
+  private def corpus(vectors: DataFrame): DataFrame =
+    graft.sql.functions.spread(vectors.select(col(idCol), subvectors.as("sv")), col(idCol))
+
+  /** (idCol, sub, slice): the m subvectors of each input vector. `sv`
+    * always holds m slices, so the outer explode keeps the same rows; it
+    * infers no `size(sv) > 0` scan filter that re-runs an expensive
+    * `vecCol` there.
+    */
+  private def slices(vectors: DataFrame): DataFrame =
+    corpus(vectors).select(col(idCol), posexplode_outer(col("sv")).as(Seq("sub", "slice")))
+
+  /** `e` (idCol, sv) as one row per (vector, subspace with cells):
+    * (idCol, sv, sub, code), `code` the subspace's nearest cell.
+    */
+  private def coded(e: DataFrame, cells: Map[Int, Array[Row]]): DataFrame = {
+    val subs = (0 until numSubspaces).filter(cells.contains)
+    val codes = subs.map(j => struct(lit(j).as("sub"), NearestCell.column(
+      NearestCell.L2ArgMin, col("sv")(j), cells(j))("cid").as("code")))
+    if (codes.isEmpty)
+      e.select(col(idCol), col("sv"), lit(0).as("sub"), lit(null).cast("long").as("code"))
+        .where(lit(false))
+    else e.withColumn("a", explode(array(codes: _*)))
+      .select(col(idCol), col("sv"), col("a.sub").as("sub"), col("a.code").as("code"))
+  }
+
+  /** Learned codebooks (sub, code, centroid) as a local frame: per
+    * subspace, the k lowest-id seeds' slices + one Lloyd step, under the
+    * keep rule. Empty when no id is non-null.
     */
   def fit(vectors: DataFrame): DataFrame = {
-    val s = slices(vectors)
-    // code = rank of the seed id among the k lowest ids (shared Seeding
-    // idiom — no global window node anywhere); only the id column rides
-    // the TakeOrdered, the slices join back from `s` by id
-    val seedIds = Seeding.kLowestIdRanks(
-      vectors.select(col(idCol)), idCol, codebookSize, "code")
-    val seeds = s.join(broadcast(seedIds), idCol)
-      .select(col("sub"), col("code"), col("slice").as("centroid"))
-    val assigned = assign(s, seeds)
-    val means = s.join(assigned, Seq(idCol, "sub"))
-      .groupBy(col("sub"), col("code"))
-      .agg(graft.sql.functions.vectorMean(col("slice"), Some(subDim)).as("mean"))
-    // empty-cluster guard: a seed whose slice ties with a lower-code
-    // identical slice wins no members (argmin ties to the lowest code)
-    // and would vanish from the groupBy, breaking the documented
-    // "codes are dense 0..k-1 in every subspace" contract that
-    // forCodebook's countDistinct(code) relies on. Keep the seed's own
-    // slice as the centroid for such clusters — the same rule
-    // KMeans.refine applies.
-    seeds.join(means, Seq("sub", "code"), "left")
-      .select(col("sub"), col("code"),
-        coalesce(col("mean"), col("centroid")).as("centroid"))
+    val seeds = Seeding.seedRows(vectors, idCol, subvectors, codebookSize)
+    def slice(seed: Row, j: Int) = seed.getSeq[Any](1)(j)
+    val cells = (0 until numSubspaces).map(j => j -> seeds.map(r => Row(r.get(0), slice(r, j)))).toMap
+    // rows with a null id stay out of the means
+    val means = if (seeds.isEmpty) Map.empty[(Int, Long), Any]
+      else coded(corpus(vectors).where(col(idCol).isNotNull), cells)
+        .groupBy(col("sub"), col("code")).agg(vectorMean(col("sv")(col("sub")), Some(subDim)))
+        .collect().collect { case r if !r.anyNull => (r.getInt(0), r.getLong(1)) -> r.get(2) }.toMap
+    // the keep rule: a code without a mean keeps its seed slice
+    val rows = for (j <- 0 until numSubspaces; r <- seeds)
+      yield Row(j, r.get(0), means.getOrElse((j, r.getLong(0)), slice(r, j)))
+    vectors.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("sub", IntegerType, nullable = false),
+      StructField("code", LongType, nullable = false),
+      StructField("centroid", ArrayType(DoubleType)))))
   }
 
   /** Production-knob codebooks: per-subspace [[KMeans]] with `iters`
@@ -116,21 +146,20 @@ class ProductQuantizer(
     }.reduce(_ unionByName _)
   }
 
-  /** (idCol, sub, code): nearest codebook entry per (vector, subspace);
-    * ties to the lowest code.
-    */
-  private def assign(s: DataFrame, codebook: DataFrame): DataFrame =
-    s.join(broadcast(codebook), "sub")
-      .select(col(idCol), col("sub"), col("code"),
-        l2sq(col("slice"), col("centroid")).as("d2"))
-      .groupBy(col(idCol), col("sub"))
-      .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"))
-
   /** PQ codes (idCol, sub, code) for every vector under a fitted codebook
     * — long format (one row per subspace), the join-friendly layout.
+    *
+    * Eager: `codebook` is collected when this is called and the frame
+    * codes against that snapshot. One row per (input row, subspace with
+    * cells): duplicate ids are not collapsed and a null id keeps its rows;
+    * no rows for an empty codebook.
     */
-  def encode(vectors: DataFrame, codebook: DataFrame): DataFrame =
-    assign(slices(vectors), codebook)
+  def encode(vectors: DataFrame, codebook: DataFrame): DataFrame = {
+    val cells = codebook.select(col("sub").cast("int"), col("code").cast("long"),
+        col("centroid").cast("array<double>")).collect().filterNot(_.isNullAt(0))
+      .groupBy(_.getInt(0)).map { case (j, rs) => j -> rs.map(r => Row(r.get(1), r.get(2))) }
+    coded(corpus(vectors), cells).select(col(idCol), col("sub"), col("code"))
+  }
 
   /** Asymmetric-distance (ADC) top-k: exact query-to-centroid distance
     * tables (m×k per query, broadcast), approximate distance to a coded

@@ -1,48 +1,34 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Shared seed-selection idiom for the trained-index family ([[KMeans]],
-  * [[ProductQuantizer]], [[IvfCosineIndex]]): the k lowest-id rows, each
-  * tagged with its dense 0-based rank in id order.
+/** The one seed selection of the trained quantizers ([[KMeans]],
+  * [[IvfCosineIndex]], [[ProductQuantizer]]): the k lowest non-null-id
+  * rows, collected as driver rows and labelled by their id's dense
+  * 0-based rank.
   *
-  * Rank — not the id value itself — is the seed label, for two reasons:
-  * labels must be usable for ANY orderable id type (a `cast("long")` on
-  * string ids like UUIDs yields NULL under non-ANSI defaults, and NULL
-  * never equi-joins, so every downstream lookup would silently return
-  * zero rows), and dense 0..k-1 labels are a layout contract (inverted
-  * lists partition by them, codebooks derive k from them).
-  *
-  * The rank comes from a tiny triangle self-join over the k selected ids
-  * (count of strictly-smaller DISTINCT ids) — k² pairs over k ≤ a few
-  * thousand rows, broadcast both sides — rather than a global
-  * `row_number` window, which would introduce the single-partition
-  * window node the plan guard bans. Rank order equals id order, so
-  * tie-breaks keyed on the label ("lowest cid wins") pick the same seed
-  * they would under id keys.
+  * Invariants:
+  *  - one top-k collect over the input, no join and no window;
+  *  - a null id never takes a seed slot (it would win the ordering);
+  *  - ranks are dense over DISTINCT ids: rows sharing an id share a rank,
+  *    so labels are 0..n-1 without gaps, whatever the id type (a rank,
+  *    unlike `cast("long")`, labels string ids too);
+  *  - rank order is id order, so "lowest label wins" tie-breaks pick the
+  *    seed that "lowest id wins" would.
   */
 private[similarity] object Seeding {
 
-  /** The k lowest-id rows of `df` (all columns preserved) plus `rankCol`:
-    * the row's dense 0-based rank in id order. ONE pass over `df` — a
-    * TakeOrdered carrying the payload columns, then a k-row-local rank
-    * join; callers must NOT re-join the result against the corpus (that
-    * would be the second full scan this shape exists to avoid).
-    *
-    * NULL ids are excluded up front (a NULL would win the ordering, then
-    * vanish from every downstream equi-join — a silently missing seed).
-    * Ranks are dense over DISTINCT ids; duplicate ids — corpus ids are
-    * expected unique — share one rank rather than leaving gaps that
-    * would break the dense-0..k-1 label contract.
+  /** Rows (rank BIGINT, payload) of the k lowest non-null ids of `df`, in
+    * id order. Adjacent ids are compared on the driver: `==` equates -0.0
+    * with 0.0 and `equals` NaN with NaN, as Spark's grouping does.
     */
-  def kLowestIdRanks(df: DataFrame, idCol: String, k: Int, rankCol: String): DataFrame = {
+  def seedRows(df: DataFrame, idCol: String, payload: Column, k: Int): Array[Row] = {
     val top = df.where(col(idCol).isNotNull).orderBy(col(idCol)).limit(k)
-    val ids = top.select(col(idCol))
-    val ranked = ids.as("x")
-      .join(ids.select(col(idCol).as("__y")).as("y"), col("__y") < col(idCol), "left")
-      .groupBy(col(idCol))
-      .agg(count_distinct(col("__y")).cast("long").as(rankCol))
-    top.join(broadcast(ranked), idCol)
+      .select(col(idCol), payload).collect()
+    val same = (a: Any, b: Any) => a == b || java.util.Objects.equals(a, b)
+    val ranks = top.indices.scanLeft(-1L)((r, i) =>
+      if (i > 0 && same(top(i).get(0), top(i - 1).get(0))) r else r + 1).tail
+    top.zip(ranks).map { case (r, rank) => Row(rank, r.get(1)) }
   }
 }

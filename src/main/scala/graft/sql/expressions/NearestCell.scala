@@ -32,7 +32,9 @@ import org.apache.spark.sql.types._
   *   - NaN is the largest value (farthest under L2, nearest under cosine);
   *   - -0.0 and 0.0 tie;
   *   - a null winning cid gives null;
-  *   - an empty cell set gives null (an empty array for the top-n).
+  *   - an empty cell set gives null (an empty array for the top-n);
+  *   - an arg-best over a non-empty, null-free cid literal is not
+  *     nullable: it always selects a cid.
   *
   * The shapes differ only in the metric's direction and in where a null
   * score ranks; see [[NearestCell.Shape]].
@@ -59,8 +61,11 @@ case class NearestCell(
 
   override def dataType: DataType = shape.dataType
   // a null vector still selects (all scores null), so this must not be
-  // null-intolerant: eval and codegen pass the null through
-  override def nullable: Boolean = shape.nullable
+  // null-intolerant: eval and codegen pass the null through. Not nullable
+  // where the shape can never give null for these cids, so a join on the
+  // result infers no isnotnull(nearest_cell(...)) filter that would run
+  // the kernel a second time
+  override def nullable: Boolean = shape.nullable(cids)
   override def prettyName: String = "nearest_cell"
 
   override def eval(input: InternalRow): Any = nearest(
@@ -135,7 +140,7 @@ object NearestCell {
   sealed abstract class Shape(val cosine: Boolean, val nullNearest: Boolean, val n: Int)
       extends Serializable {
     def dataType: DataType
-    def nullable: Boolean = true
+    def nullable(cids: Expression): Boolean = true
     def result(r: Ranked, cids: ArrayData): Any
     protected def cid(r: Ranked, i: Int, cids: ArrayData): Any =
       if (cids.isNullAt(r.idx(i))) null else cids.getLong(r.idx(i))
@@ -146,6 +151,7 @@ object NearestCell {
     */
   case object CosineArgMax extends Shape(cosine = true, nullNearest = false, n = 1) {
     def dataType: DataType = LongType
+    override def nullable(cids: Expression): Boolean = !selectsCid(cids)
     def result(r: Ranked, cids: ArrayData): Any = if (r.size == 0) null else cid(r, 0, cids)
   }
 
@@ -155,7 +161,7 @@ object NearestCell {
   case class CosineTopN(override val n: Int)
       extends Shape(cosine = true, nullNearest = false, n = n) {
     def dataType: DataType = ArrayType(LongType, containsNull = true)
-    override def nullable: Boolean = false
+    override def nullable(cids: Expression): Boolean = false
     def result(r: Ranked, cids: ArrayData): Any =
       new GenericArrayData(Array.tabulate[Any](r.size)(cid(r, _, cids)))
   }
@@ -167,6 +173,7 @@ object NearestCell {
     def dataType: DataType = StructType(Seq(
       StructField("cid", LongType, nullable = true),
       StructField("d2", DoubleType, nullable = true)))
+    override def nullable(cids: Expression): Boolean = !selectsCid(cids)
     def result(r: Ranked, cids: ArrayData): Any =
       if (r.size == 0) null
       else InternalRow(cid(r, 0, cids), if (r.isNull(0)) null else r.score(0))
@@ -177,6 +184,15 @@ object NearestCell {
     def dataType: DataType = DoubleType
     def result(r: Ranked, cids: ArrayData): Any =
       if (r.size == 0 || r.isNull(0)) null else r.score(0)
+  }
+
+  /** An arg-best over `cids` always selects a non-null cid: they are a
+    * non-empty, null-free literal.
+    */
+  private def selectsCid(cids: Expression): Boolean = cids match {
+    case Literal(a: ArrayData, _) =>
+      a.numElements() > 0 && (0 until a.numElements()).forall(!a.isNullAt(_))
+    case _ => false
   }
 
   /** The kept cells, nearest first: index into the cell arrays, score,

@@ -116,22 +116,16 @@ class IvfStreamMaintainer(
     // estimator contract (the KMeans/forCodebook discipline): empty
     // centroids would make every future appendBatch assign against
     // nothing and silently index zero vectors forever. Checked on the
-    // corpus (take-1 scan) BEFORE anything is written, and the guard must
-    // not leave a half-written layout. The guard counts rows with a
-    // NON-NULL id: Seeding.kLowestIdRanks drops null ids, so a corpus of
-    // only null-id rows would train ZERO centroids even though it is
-    // non-empty (r17, per-round advice).
-    require(!corpus.where(col(ivf.idCol).isNotNull).isEmpty,
-      "cannot bootstrap a maintained IVF index on a corpus with no " +
-        "non-null-id rows (null ids train no centroids)")
-    // write the trained centroids DIRECTLY (one action computes and
-    // persists them), then list the corpus against the written copy —
-    // r16: the previous ivf.build(...) route localCheckpoint-ed the
-    // centroids as an extra blocking action before the same two writes;
-    // parquet round-trips doubles bit-exactly, so assignment against the
-    // loaded copy is assignment against the trained one
-    ivf.centroids(corpus).coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/centroids")
+    // trained centroids, a local frame, BEFORE anything is written, so the
+    // guard never leaves a half-written layout. A corpus whose ids are all
+    // null trains none: seeds never take a null id.
+    val cents = ivf.centroids(corpus)
+    require(!cents.isEmpty,
+      "cannot bootstrap a maintained IVF index on a corpus that trains no " +
+        "centroids (no non-null-id rows, or only null or empty vectors)")
+    // parquet round-trips doubles bit-exactly, so listing against the
+    // written copy is listing against the trained one
+    cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     centsCache = null // a failed earlier bootstrap may have cached debris
     writeBatch(ivf.listRows(corpus, centroids(spark)), batchId = 0L)
   }

@@ -4,9 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Write `.explain("formatted")` output (plus the executed post-AQE plan)
-  * for named queries to `<outDir>/<query>_<suffix>.txt` — the plan
-  * evidence files the optimization rounds commit under `plans/rNN/`.
+/** Write, for named queries, `<outDir>/<query>_<suffix>.txt` with three
+  * sections: `.explain("formatted")`, the executed post-AQE plan, and that
+  * plan id-normalized by `Bench.normalizePlan` — the input of
+  * `Bench.planHash`. Diffing the normalized section of two dumps shows
+  * which plan change (or which run-varying token the normalization
+  * missed) flipped a hash; the first two are the plan evidence files
+  * committed under `plans/rNN/`.
   *
   * Usage: runMain graft.tools.ExplainDump <outDir> <suffix> <query...>
   * (sfDir from SPARK_GRAFT_SF_DIR, default sf0.1 — plans are taken at the
@@ -39,7 +43,9 @@ object ExplainDump {
       val executed = df.queryExecution.executedPlan.toString
       Files.writeString(outDir.resolve(s"${name}_$suffix.txt"),
         s"===== $name — explain(formatted) =====\n$formatted\n" +
-          s"===== $name — executed (post-AQE) =====\n$executed\n")
+          s"===== $name — executed (post-AQE) =====\n$executed\n" +
+          s"===== $name — normalized (plan hash input) =====\n" +
+          s"${graft.Bench.normalizePlan(executed)}\n")
       println(s"[explain] wrote ${name}_$suffix.txt")
     }
     spark.stop()

@@ -308,7 +308,7 @@ object ScaleSmoke {
           numCentroids = cells, nprobe = 4, dim = Some(64))
         val idx = ivf.build(d)
         val pq = new graft.similarity.ProductQuantizer(8, 16, 64)
-        val cb = pq.fit(d).localCheckpoint()
+        val cb = pq.fit(d)
         val codes = pq.encode(d, cb)
         val queries = d.where(col("vec_id") < 100)
         val cands = ivf.probes(queries, idx)

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.sql.expressions.{HyperplaneSignature, MinHashSignature, SimHash64}
+import graft.sql.expressions.{HyperplaneSignature, MinHashSignature, NearestCell, SimHash64}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -16,9 +16,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * cartesian products, no unpartitioned (single-task) window sorts, and no
   * expensive expressions (regexp / split / higher-order lambdas / UDFs)
   * landing in a scan's DataFilters — the classic 100TB scale-killers —
-  * no signature kernel inside a `Filter` node, and no hash aggregate too
-  * wide for whole-stage codegen in any plan the query runs while it is
-  * built or in its final plan.
+  * no row-local signature or nearest-cell kernel inside a `Filter` node,
+  * and no hash aggregate too wide for whole-stage codegen in any plan the
+  * query runs while it is built or in its final plan.
   * (BroadcastNestedLoopJoin is allowed: it appears only for intentionally
   * broadcast one-row totals and broadcast probe sets.)
   *
@@ -49,15 +49,15 @@ class PlanAuditSpec extends SparkTestBase {
       "lambdafunction(", "zip_with(", "UDF(", "pythonUDF", "shingles(",
       "minhash_signature(", "hyperplane_signature(", "simhash")
 
-  /** The row-local signature kernels, as their plans print them. A
-    * physical `Filter` over one of them re-runs the kernel wherever the
-    * optimizer pushed it: an equi-join on a key derived from a nullable
-    * kernel gets an inferred `isnotnull(key)` that Catalyst pushes below
-    * repartitions into the scan stage, where a single-split input signs
-    * every row on one task (q36 before its signatures were pinned).
+  /** The row-local signature and nearest-cell kernels, as their plans
+    * print them. A physical `Filter` over one of them re-runs the kernel
+    * wherever the optimizer pushed it: an equi-join on a key derived from
+    * a nullable kernel gets an inferred `isnotnull(key)` that Catalyst
+    * pushes below repartitions into the scan stage, where a single-split
+    * input signs (or assigns) every row on one task.
     */
-  private val signatureKernels =
-    Seq("simhash64(", "minhash_signature(", "hyperplane_signature(")
+  private val rowKernels =
+    Seq("simhash64(", "minhash_signature(", "hyperplane_signature(", "nearest_cell(")
 
   // a physical plan line whose node (after the tree art and the codegen
   // stage id) is a Filter
@@ -65,7 +65,7 @@ class PlanAuditSpec extends SparkTestBase {
 
   private def kernelFilters(plan: String): Seq[String] =
     plan.linesIterator.filter(l => filterNode.findPrefixOf(l).nonEmpty &&
-      signatureKernels.exists(l.contains)).map(_.trim).toSeq
+      rowKernels.exists(l.contains)).map(_.trim).toSeq
 
   private def hasInferredGenerateClone(filters: String): Boolean =
     filters.contains("size(") && filters.contains("> 0") &&
@@ -138,7 +138,7 @@ class PlanAuditSpec extends SparkTestBase {
         s"InferFiltersFromGenerate clone in scan DataFilters of $name:\n${dirtyScans.mkString("\n")}")
       val filtered = kernelFilters(plan)
       assert(filtered.isEmpty,
-        s"signature kernel inside a Filter in $name (materialize the kernel's " +
+        s"row-local kernel inside a Filter in $name (materialize the kernel's " +
           s"output before the join that infers the filter):\n${filtered.mkString("\n")}")
   }
 
@@ -279,21 +279,28 @@ class PlanAuditSpec extends SparkTestBase {
     "q188_neardup_core" -> classOf[MinHashSignature],
     "q22_ann_lsh" -> classOf[HyperplaneSignature])
 
-  /** Builds and collects `name`, asserting its `kernel` ran in exactly one
-    * plan node across the pin and the final plan (reused exchanges are
-    * leaves here), and never in a Filter, where an inferred isnotnull
-    * re-signs every row. Returns the built frame.
+  /** Builds and collects `name`: the built frame, and every plan node
+    * holding `kernel` across the plans it executes, the build's jobs and
+    * the final plan (reused exchanges are leaves here).
     */
-  private def assertSignedOnce(name: String, kernel: Class[_ <: Expression]): DataFrame = {
+  private def kernelNodes(name: String, kernel: Class[_ <: Expression]): (DataFrame, Seq[SparkPlan]) = {
     val helper = new AdaptiveSparkPlanHelper {}
     val (df, plans) = executing {
       val q = SparkEntry.queries(name)(spark, dir)
       q.collect()
       q
     }
-    val signing = plans.flatMap(p => helper.collect(p) {
+    (df, plans.flatMap(p => helper.collect(p) {
       case n if n.expressions.exists(_.exists(e => kernel.isInstance(e))) => n
-    })
+    }))
+  }
+
+  /** Asserts `name`'s `kernel` ran in exactly one plan node, and never in
+    * a Filter, where an inferred isnotnull re-signs every row. Returns the
+    * built frame.
+    */
+  private def assertSignedOnce(name: String, kernel: Class[_ <: Expression]): DataFrame = {
+    val (df, signing) = kernelNodes(name, kernel)
     assert(signing.size === 1,
       s"$name: ${kernel.getSimpleName} in ${signing.size} plan nodes\n" +
         signing.map(_.simpleString(10)).mkString("\n"))
@@ -303,6 +310,22 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("LSH pair queries sign each row once: one kernel node per query, never a Filter") {
     signingKernels.foreach { case (name, kernel) => assertSignedOnce(name, kernel) }
+  }
+
+  test("IVF queries assign with nearest_cell in no Filter: one node per consumer of the lists") {
+    // the IVF list join's cid is an arg-best over a non-empty, null-free
+    // cid literal, so it is not nullable and infers no isnotnull filter
+    // that would assign every corpus row a second time. Per query: the
+    // Lloyd step, the probes, and one node per read of the lists (q108
+    // reads them three times); q116 adds PQ's fit and encode.
+    val nodes = Seq("q35_ann_ivf", "q201_ann_recall", "q116_ivfpq_search", "q108_semantic_dedup")
+      .map(name => name -> kernelNodes(name, classOf[NearestCell])._2)
+    for ((name, ns) <- nodes) {
+      val shown = ns.map(_.simpleString(10)).mkString("\n")
+      info(s"$name: ${ns.size} nearest_cell nodes\n$shown")
+      assert(!ns.exists(_.isInstanceOf[FilterExec]), s"$name: nearest_cell in a Filter\n$shown")
+    }
+    assert(nodes.map(_._2.size) === Seq(3, 3, 5, 4))
   }
 
   test("q36's pair stage: signed once, long signatures, distinct hashes its own keys") {

@@ -132,7 +132,7 @@ class KMeansSpec extends SparkTestBase {
       cents
     }
     def fit(v: DataFrame): DataFrame = refine(corpus(v),
-      Seeding.kLowestIdRanks(corpus(v), "vec_id", k, "cid")
+      TriangleSeeding.kLowestIdRanks(corpus(v), "vec_id", k, "cid")
         .select(col("cid"), col("cv").as("centroid")))
     def fitFarthest(v: DataFrame): DataFrame = {
       val e = corpus(v)

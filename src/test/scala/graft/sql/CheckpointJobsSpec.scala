@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
 import graft.graph.{BfsDistance, Coreness, DensestSubgraph, KCore}
-import graft.similarity.KMeans
+import graft.similarity.{IvfCosineIndex, KMeans, ProductQuantizer}
 import graft.text.VocabBuilder
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
 /** Job-count pins: [[Checkpoint]] costs the jobs of a bare
   * `localCheckpoint` and returns exact aggregates, and the convergence
   * loops that use it stay within their documented jobs per round, as do
-  * the loops that keep their state on the driver (KMeans, VocabBuilder). The
-  * per-round cost is the job difference between two inputs whose loop
-  * depths differ by a known number of rounds, so set-up and the final
-  * plan cancel out.
+  * the loops that keep their state on the driver (KMeans, VocabBuilder,
+  * and the IVF and PQ quantizers). The per-round cost is the job
+  * difference between two inputs whose loop depths differ by a known
+  * number of rounds, so set-up and the final plan cancel out.
   */
 class CheckpointJobsSpec extends SparkTestBase {
   import spark.implicits._
@@ -108,14 +108,34 @@ class CheckpointJobsSpec extends SparkTestBase {
     assert(pr <= 4.0)
   }
 
+  /** 400 vectors of `dim` small integers in 4 partitions. */
+  private def vectors(dim: Int): DataFrame = spark.range(0, 400, 1, 4).select(col("id").as("vec_id"),
+    array((0 until dim).map(j => (col("id") % (7 + 4 * j)).cast("double")): _*).as("embedding"))
+
   test("KMeans: jobs per Lloyd round") {
-    val v = spark.range(0, 400, 1, 4).select(col("id").as("vec_id"),
-      array((col("id") % 7).cast("double"), (col("id") % 11).cast("double")).as("embedding"))
+    val v = vectors(2)
     val fit = (iters: Int) => jobs(new KMeans(k = 3, iters = iters, dim = 2).fit(v))
     val (one, three) = (fit(1), fit(3))
     info(s"jobs: iters 1 -> $one, iters 3 -> $three")
     // one collect: the spread shuffle, the means shuffle and the result
     assert((three - one) / 2.0 === 3.0)
+  }
+
+  test("IvfCosineIndex.build: jobs of a whole build") {
+    val n = jobs(new IvfCosineIndex(numCentroids = 3, nprobe = 1, dim = Some(2)).build(vectors(2)))
+    info(s"jobs: $n")
+    // the seed collect, then one Lloyd collect: the spread shuffle, the
+    // means shuffle and the result; the lists stay lazy
+    assert(n === 4)
+  }
+
+  test("ProductQuantizer: jobs of fit plus encode and collect") {
+    val (v, pq) = (vectors(4), new ProductQuantizer(numSubspaces = 2, codebookSize = 3, dim = 4))
+    val n = jobs(pq.encode(v, pq.fit(v)).collect())
+    info(s"jobs: $n")
+    // fit: the seed collect and one Lloyd collect (3 jobs); encode: the
+    // spread shuffle and the result
+    assert(n === 6)
   }
 
   test("VocabBuilder: jobs of a whole vocabulary build and collect") {

@@ -91,10 +91,10 @@ class IvfStreamMaintainerSpec extends SparkTestBase {
   }
 
   test("bootstrap on an all-null-id corpus fails loudly instead of training zero centroids") {
-    // Seeding.kLowestIdRanks drops null ids, so a NON-EMPTY corpus whose
-    // ids are all null would train zero centroids and every future
-    // appendBatch would silently index nothing — the guard must catch it
-    // before anything is written (r17, per-round advice)
+    // seeds never take a null id, so a NON-EMPTY corpus whose ids are all
+    // null trains zero centroids and every future appendBatch would
+    // silently index nothing — the guard on the trained centroids must
+    // catch it before anything is written
     val path = Files.createTempDirectory("graft-ivf-nullid").toString
     val m = new IvfStreamMaintainer(ivf, path)
     val allNull = (0L until 50L).map(vec).toDF()
